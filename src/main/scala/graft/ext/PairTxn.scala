@@ -171,58 +171,38 @@ object PairTxn {
   private def stage(
       spark: SparkSession, c: SideCommit,
       coordRoot: Path, id: String): StagedSide = {
-    val (fs, root) = TxTable.fsOf(spark, c.dir)
-    val base = TxTable.latestVersion(spark, c.dir).getOrElse(0L)
-    val (tblStore, _) = TxTable.storeOf(spark, c.dir)
+    val b = TxTable.prologue(spark, c.dir, "mergeChangeSetDv",
+      init = c.isInstanceOf[PairCommit])
     // the sentinel lands BEFORE the first data byte (no window for
     // vacuum to mistake this txn's staged files for aged orphans);
     // tolerate an existing one (an OCC retry restages the same
     // version slot): the protection logic only needs SOME open txn's
     // claim on the slot, and a stale claim resolves as stale
-    tblStore.delete(sentinelPath(root, base + 1))
-    tblStore.writeIfAbsent(sentinelPath(root, base + 1),
+    b.store.delete(sentinelPath(b.root, b.m.version + 1))
+    b.store.writeIfAbsent(sentinelPath(b.root, b.m.version + 1),
       s"txn\n$coordRoot\n$id\n${System.currentTimeMillis()}")
     val staged = c match {
       case p: PairCommit =>
-        val baseManifest =
-          if (base == 0L) TxTable.Manifest(0L, Seq.empty)
-          else TxTable.readManifest(spark, p.dir, base)
-        val commitDir = TxTable.newCommitDir(root, base + 1)
-        val writer = p.df.write.mode("errorifexists")
-        p.partitionCol.fold(writer)(c => writer.partitionBy(c))
-          .parquet(commitDir.toString)
-        val listed = TxTable.listCommitFiles(fs, root, commitDir, p.partitionCol)
-        val entries =
-          if (p.replace)
-            TxTable.gatherFileMeta(spark, root, listed, p.statsCols, None,
-              ndvMirrorable = false,
-              fileSchema = Some(TxTable.dataFileSchema(p.df.schema, p.partitionCol)))
-          else
-            TxTable.propagateSkipping(spark, root, baseManifest, listed,
-              p.df.schema, p.partitionCol)
-        TxTable.enforceConstraints(spark, root, baseManifest, entries,
-          Some(p.df.schema.json))
-        val newFiles = if (p.replace) entries else baseManifest.files ++ entries
-        val extraProps =
-          if (p.replace && p.statsCols.nonEmpty) Map(TxTable.NdvLaneProp -> "xx")
-          else Map.empty[String, String]
-        TxTable.stageCommit(baseManifest, newFiles,
+        val fresh = TxTable.writeFresh(spark, b, p.df, p.partitionCol,
+          Option.when(p.replace)(TxTable.Skipping(p.statsCols)))
+        TxTable.stageCommit(b.m, if (p.replace) fresh else b.m.files ++ fresh,
           Some(p.df.schema.json), if (p.replace) "pairreplace" else "pairappend",
-          full = p.replace, extraProps = extraProps)
+          full = p.replace, extraProps =
+            if (p.replace && p.statsCols.nonEmpty) Map(TxTable.NdvLaneProp -> "xx")
+            else Map.empty[String, String])
       case mdv: MergeDvCommit =>
-        TxTable.stageMergeDv(spark, mdv.dir, mdv.changes, mdv.keyCol,
+        TxTable.stageMergeDv(spark, b, mdv.changes, mdv.keyCol,
           mdv.opCol, mdv.partitionCol, txn = mdv.txn,
           touchedHint = mdv.touchedHint).getOrElse {
           // no-op changeset (nothing tombstoned/inserted, or an
           // already-recorded idempotent-writer replay): the group's
           // versions still move in step — stage an empty delta
           // carrying the base state forward
-          val m = TxTable.readManifest(spark, mdv.dir, base)
-          TxTable.stageCommit(m, m.files, newSchema = None,
+          TxTable.stageCommit(b.m, b.m.files, newSchema = None,
             op = "merge-cs-dv", full = false)
         }
     }
-    StagedSide(root.toString, staged.version, staged.manifest, staged.checkpoint)
+    StagedSide(b.root.toString, staged.version, staged.manifest, staged.checkpoint)
   }
 
   /** Idempotent executor shared by the commit path and recovery: every

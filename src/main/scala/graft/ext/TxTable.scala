@@ -1,7 +1,7 @@
 package graft.ext
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -162,16 +162,18 @@ object TxTable {
     * parquet footers for schema inference (at 100 TB that is one
     * footer round-trip per live commit dir per query, and locally it
     * was the single largest cost of every TxTable operation). A dir
-    * absent from the map falls back to inference. */
-  /** `txns` maps a writer application id to the highest transaction
+    * absent from the map falls back to inference.
+    *
+    * `txns` maps a writer application id to the highest transaction
     * version it has committed (accumulated along the log; checkpoints
     * carry the full map) — the idempotent-writer ledger: an
     * at-least-once producer (foreachBatch replays its last micro-batch
     * after a crash between table commit and stream checkpoint) tags
     * each commit with (appId, batchId), and a re-application of an
     * already-recorded version is SKIPPED instead of double-applying
-    * the changeset. */
-  /** `props` are table properties accumulated along the log (each
+    * the changeset.
+    *
+    * `props` are table properties accumulated along the log (each
     * commit header carries only the entries it SETS; checkpoints carry
     * the full map) — they SURVIVE full-replace commits, like the txn
     * ledger: a compaction around a governed table must not drop its
@@ -645,13 +647,6 @@ object TxTable {
       "commit_ts")
   }
 
-  /** Publish version `base + 1`: a change-sized DELTA manifest (adds =
-    * fresh paths, removes = base paths absent from the new state) or a
-    * "full" manifest for replace commits; plus a checkpoint when the
-    * version hits the [[checkpointInterval]] cadence or the commit is
-    * full. Refuses (and throws [[CommitConflictException]]) if that
-    * manifest already exists — the competing writer won; this writer's
-    * data files are orphans for [[vacuum]]. */
   /** A commit fully RENDERED but not yet published: the version it
     * targets, the manifest bytes, and the checkpoint bytes when the
     * cadence (or a full commit) calls for one. Staging is pure — no
@@ -722,14 +717,67 @@ object TxTable {
     staged.version
   }
 
+  /** What every mutation starts from: the table's file system, log
+    * store and qualified root, and the manifest of the version it
+    * builds on. */
+  private[ext] final case class Base(
+      fs: FileSystem, store: LogStore, root: Path, m: Manifest) {
+    /** The idempotent-writer gate: an at-least-once producer
+      * (foreachBatch replaying its last batch after a crash between
+      * table commit and stream checkpoint) tags commits with a monotone
+      * (appId, version); a commit whose version the ledger already
+      * records is a no-op at the current version instead of a DOUBLE
+      * APPLICATION (inserts would duplicate — applyChangeSet treats
+      * them as new keys). */
+    def applied(txn: Option[(String, Long)]): Boolean =
+      txn.exists { case (app, ver) => m.txns.get(app).exists(_ >= ver) }
+  }
+
+  /** The prologue of every mutation: the table's [[Base]] at its
+    * latest version, or at `expectedBase` — optimistic concurrency from
+    * a version the caller read earlier: if someone else committed
+    * since, the publication of expectedBase+1 conflicts and the
+    * mutation throws instead of silently dropping the competing
+    * commit's changes. A table without any version is an error naming
+    * `op`, unless `init` allows an empty version 0. */
+  private[ext] def prologue(
+      spark: SparkSession, dir: String, op: String,
+      expectedBase: Option[Long] = None, init: Boolean = false): Base = {
+    val (fs, root) = fsOf(spark, dir)
+    val m = expectedBase.orElse(latestVersion(spark, dir)) match {
+      case Some(v) => readManifest(spark, dir, v)
+      case None if init => Manifest(0L, Seq.empty)
+      case None => sys.error(s"$op needs an initialized table at $dir")
+    }
+    Base(fs, logStoreFactory(fs), root, m)
+  }
+
+  /** Run `body` against the [[prologue]]'s base — or return the base
+    * version untouched when the txn ledger already records `txn`,
+    * checked BEFORE any data is written, so a replay costs one log
+    * replay, not a wasted commit dir. */
+  private def mutation(
+      spark: SparkSession, dir: String, op: String,
+      txn: Option[(String, Long)] = None, expectedBase: Option[Long] = None,
+      init: Boolean = false)(body: Base => Long): Long = {
+    val b = prologue(spark, dir, op, expectedBase, init)
+    if (b.applied(txn)) b.m.version else body(b)
+  }
+
+  /** Publish version `base + 1`: a change-sized DELTA manifest (adds =
+    * fresh paths, removes = base paths absent from the new state) or a
+    * "full" manifest for replace commits; plus a checkpoint when the
+    * version hits the [[checkpointInterval]] cadence or the commit is
+    * full. Refuses (and throws [[CommitConflictException]]) if that
+    * manifest already exists — the competing writer won; this writer's
+    * data files are orphans for [[vacuum]]. */
   private def commit(
-      store: LogStore, root: Path, baseManifest: Manifest,
-      newFiles: Seq[FileEntry], newSchema: Option[String],
-      op: String, full: Boolean,
+      b: Base, newFiles: Seq[FileEntry], newSchema: Option[String],
+      op: String, full: Boolean = false,
       extraSchemas: Map[String, String] = Map.empty,
       txn: Option[(String, Long)] = None,
       extraProps: Map[String, String] = Map.empty): Long =
-    publishStaged(store, root, stageCommit(baseManifest, newFiles, newSchema,
+    publishStaged(b.store, b.root, stageCommit(b.m, newFiles, newSchema,
       op, full, extraSchemas, txn, extraProps))
 
   /** RESTORE: publish a new version CONTENT-IDENTICAL to an earlier
@@ -744,7 +792,7 @@ object TxTable {
     * pre-constraint rows — the operator running a rollback owns that
     * call, same stance as Delta's RESTORE). */
   def restore(spark: SparkSession, dir: String, toVersion: Long): Long = {
-    val (store, root) = storeOf(spark, dir)
+    val (fs, root) = fsOf(spark, dir)
     val base = latestVersion(spark, dir).getOrElse(
       sys.error(s"restore needs an initialized table at $dir"))
     if (toVersion == base) return base
@@ -752,8 +800,8 @@ object TxTable {
     // carry only the dirs the restored version actually references —
     // the replay-accumulated map may hold since-retired dirs
     val liveDirs = ms(toVersion).files.map(f => dirOf(f.path)).toSet
-    commit(store, root, ms(base), ms(toVersion).files, newSchema = None,
-      op = "restore", full = false,
+    commit(Base(fs, logStoreFactory(fs), root, ms(base)), ms(toVersion).files,
+      newSchema = None, op = "restore",
       extraSchemas = ms(toVersion).schemas.view.filterKeys(liveDirs).toMap)
   }
 
@@ -769,14 +817,11 @@ object TxTable {
     * manifest carries no adds/removes, just the property — O(1) log
     * bytes, no data touched, normal conflict detection. */
   def setTableProperty(
-      spark: SparkSession, dir: String, key: String, value: String): Long = {
-    val (store, root) = storeOf(spark, dir)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"setTableProperty needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
-    commit(store, root, m, m.files, newSchema = None, op = "setprop",
-      full = false, extraProps = Map(key -> value))
-  }
+      spark: SparkSession, dir: String, key: String, value: String): Long =
+    mutation(spark, dir, "setTableProperty") { b =>
+      commit(b, b.m.files, newSchema = None, op = "setprop",
+        extraProps = Map(key -> value))
+    }
 
   /** ADD CONSTRAINT `name` CHECK (`exprSql`): validates the EXISTING
     * table in one scan (the whole-table pass that grounds the
@@ -788,21 +833,18 @@ object TxTable {
     * evaluations VIOLATE (a CHECK must hold definitively — write
     * `col IS NULL OR ...` to admit NULLs). */
   def addCheckConstraint(
-      spark: SparkSession, dir: String, name: String, exprSql: String): Long = {
-    val (store, root) = storeOf(spark, dir)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"addCheckConstraint needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
-    if (m.files.nonEmpty) {
-      val bad = readFiles(spark, root, m.files, m.schemas)
-        .where(!coalesce(expr(exprSql), lit(false))).count()
-      if (bad > 0) throw new ConstraintViolationException(
-        s"cannot add constraint '$name' CHECK ($exprSql): " +
-          s"$bad existing rows violate it")
+      spark: SparkSession, dir: String, name: String, exprSql: String): Long =
+    mutation(spark, dir, "addCheckConstraint") { b =>
+      if (b.m.files.nonEmpty) {
+        val bad = readFiles(spark, b.root, b.m.files, b.m.schemas)
+          .where(!coalesce(expr(exprSql), lit(false))).count()
+        if (bad > 0) throw new ConstraintViolationException(
+          s"cannot add constraint '$name' CHECK ($exprSql): " +
+            s"$bad existing rows violate it")
+      }
+      commit(b, b.m.files, newSchema = None, op = "addconstraint",
+        extraProps = Map(s"constraint.$name" -> exprSql))
     }
-    commit(store, root, m, m.files, newSchema = None, op = "addconstraint",
-      full = false, extraProps = Map(s"constraint.$name" -> exprSql))
-  }
 
   private def constraintsOf(props: Map[String, String]): Seq[(String, String)] =
     props.collect { case (k, v) if k.startsWith("constraint.") =>
@@ -819,13 +861,12 @@ object TxTable {
     * scan grounds that induction. Zero cost when the table has no
     * constraints. A constraint on a column the evolved schema dropped
     * fails analysis here — loud, by design. */
-  private[ext] def enforceConstraints(
+  private def enforceConstraints(
       spark: SparkSession, root: Path, m: Manifest,
-      fresh: Seq[FileEntry], schemaJson: Option[String]): Unit = {
+      fresh: Seq[FileEntry], schemaJson: String): Unit = {
     val cs = constraintsOf(m.props)
     if (cs.isEmpty || fresh.isEmpty) return
-    val schemas = schemaJson.fold(Map.empty[String, String])(s =>
-      fresh.map(f => dirOf(f.path)).distinct.map(_ -> s).toMap)
+    val schemas = fresh.map(f => dirOf(f.path) -> schemaJson).toMap
     val checks = cs.map { case (n, e) =>
       sum(when(!coalesce(expr(e), lit(false)), 1L).otherwise(0L)).as(n) }
     val row = readFiles(spark, root, fresh, schemas)
@@ -842,7 +883,7 @@ object TxTable {
   /** List the parquet files a commit's write produced, as entries
     * relative to the table root, with partition values parsed from the
     * `col=value` directory names when `partitionCol` is set. */
-  private[ext] def listCommitFiles(
+  private def listCommitFiles(
       fs: FileSystem, root: Path, commitDir: Path,
       partitionCol: Option[String]): Seq[FileEntry] = {
     val it = fs.listFiles(commitDir, true)
@@ -863,9 +904,17 @@ object TxTable {
     out.toSeq
   }
 
-  private[ext] def newCommitDir(root: Path, version: Long): Path =
+  private def newCommitDir(root: Path, version: Long): Path =
     new Path(new Path(root, "data"),
       s"v$version-${java.util.UUID.randomUUID().toString.take(8)}")
+
+  /** Which per-file skipping metadata a commit records: range stats,
+    * NDV sketches and null counts for `cols`, optionally a Bloom filter
+    * over (col, mBits, numHashes), and the NDV hash lane
+    * ([[NdvLaneProp]]). */
+  private[ext] final case class Skipping(
+      cols: Seq[String], bloom: Option[(String, Int, Int)] = None,
+      mirrorable: Boolean = false)
 
   /** ALL per-file skipping metadata for the files just written in ONE
     * bounded scan of the commit's own data (column-pruned to the stats
@@ -891,12 +940,11 @@ object TxTable {
     * O(manifest-entry) bytes regardless of row count. A file whose
     * column is all-NULL records NO stats/bloom for it (the read side's
     * conservative must-read path) instead of NPE-ing the commit. */
-  private[ext] def gatherFileMeta(
+  private def gatherFileMeta(
       spark: SparkSession, root: Path, entries: Seq[FileEntry],
-      statsCols: Seq[String],
-      bloom: Option[(String, Int, Int)],
-      ndvMirrorable: Boolean,
-      fileSchema: Option[org.apache.spark.sql.types.StructType] = None): Seq[FileEntry] = {
+      skipping: Skipping,
+      fileSchema: org.apache.spark.sql.types.StructType): Seq[FileEntry] = {
+    val Skipping(statsCols, bloom, ndvMirrorable) = skipping
     bloom.foreach { case (_, mBits, _) =>
       // mirror Bloom.build's contract: a non-multiple-of-64 width would
       // allocate floor(mBits/64) longs while Bloom.positions yields
@@ -920,9 +968,8 @@ object TxTable {
     val bloomIdx = 2 + 4 * statsCols.size
     // the commit paths just WROTE these files and pass their schema in,
     // skipping the parquet schema-inference job (one spark job + footer
-    // read per commit, pure ingest-path overhead — guide §6); absent a
-    // known schema (no caller today) the reader infers as before
-    val byFile = fileSchema.fold(spark.read)(s => spark.read.schema(s)).parquet(
+    // read per commit, pure ingest-path overhead — guide §6)
+    val byFile = spark.read.schema(fileSchema).parquet(
         entries.map(f => new Path(root, f.path).toString): _*)
       .groupBy(input_file_name().as("_f"))
       .agg(aggs.head, aggs.tail: _*)
@@ -960,6 +1007,18 @@ object TxTable {
     }
   }
 
+  /** The schema of a commit's DATA FILES as written: the frame's own
+    * schema minus the partition column (partitionBy lifts it into the
+    * directory structure), nullability relaxed the way a parquet
+    * read-back reports it. Passing this into [[gatherFileMeta]] skips
+    * the per-commit schema-inference job. */
+  private def dataFileSchema(
+      written: org.apache.spark.sql.types.StructType,
+      partitionCol: Option[String]): org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(
+      written.filterNot(f => partitionCol.contains(f.name))
+        .map(_.copy(nullable = true)))
+
   /** Re-derive the skipping metadata the BASE manifest carried (range
     * stats columns, NDV sketches, the bloom column) for a commit's
     * FRESH files, so file skipping SURVIVES merges/DML/compaction
@@ -974,33 +1033,49 @@ object TxTable {
     * recorded ([[NdvLaneProp]]): per-file register sketches only
     * compose when every file hashed the same way, so a rewrite must
     * never flip lanes. */
-  /** The schema of a commit's DATA FILES as written: the frame's own
-    * schema minus the partition column (partitionBy lifts it into the
-    * directory structure), nullability relaxed the way a parquet
-    * read-back reports it. Passing this into [[gatherFileMeta]] skips
-    * the per-commit schema-inference job. */
-  private[ext] def dataFileSchema(
-      written: org.apache.spark.sql.types.StructType,
-      partitionCol: Option[String]): org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(
-      written.filterNot(f => partitionCol.contains(f.name))
-        .map(_.copy(nullable = true)))
-
-  private[ext] def propagateSkipping(
-      spark: SparkSession, root: Path, base: Manifest,
-      fresh: Seq[FileEntry],
-      writtenSchema: org.apache.spark.sql.types.StructType,
-      partitionCol: Option[String]): Seq[FileEntry] = {
-    if (fresh.isEmpty) return fresh
+  private def propagateSkipping(
+      base: Manifest, writtenSchema: org.apache.spark.sql.types.StructType): Skipping = {
     val freshCols = writtenSchema.fieldNames.toSeq
-    val statsCols = base.files.flatMap(_.stats.keys).distinct.filter(freshCols.contains)
-    val bloomSpec = base.files.flatMap(_.bloom).map(b => (b.col, b.bits.length * 64, b.k))
-      .distinct.headOption
-      .filter { case (c, _, _) => freshCols.contains(c) }
-    gatherFileMeta(spark, root, fresh, statsCols, bloomSpec,
-      ndvMirrorable = base.props.get(NdvLaneProp).contains("md5"),
-      fileSchema = Some(dataFileSchema(writtenSchema, partitionCol)))
+    Skipping(
+      base.files.flatMap(_.stats.keys).distinct.filter(freshCols.contains),
+      base.files.flatMap(_.bloom).map(b => (b.col, b.bits.length * 64, b.k))
+        .distinct.headOption.filter { case (c, _, _) => freshCols.contains(c) },
+      base.props.get(NdvLaneProp).contains("md5"))
   }
+
+  /** The write step every commit shares: `rows` land in a fresh
+    * `data/v<base+1>-<token>` dir (partitioned by `partitionCol`), the
+    * written files become entries whose skipping metadata is gathered
+    * in ONE pass — `skipping` when the commit defines it (a full
+    * replace), else the base manifest's recipe ([[propagateSkipping]])
+    * — and the table's CHECK constraints are enforced on them unless
+    * `check` is off (content-identical maintenance rewrites). A write
+    * that produced no file leaves no dir behind. Returns the fresh
+    * entries. */
+  private[ext] def writeFresh(
+      spark: SparkSession, b: Base, rows: DataFrame,
+      partitionCol: Option[String], skipping: Option[Skipping] = None,
+      check: Boolean = true): Seq[FileEntry] = {
+    val dir = newCommitDir(b.root, b.m.version + 1)
+    val writer = rows.write.mode("errorifexists")
+    partitionCol.fold(writer)(writer.partitionBy(_)).parquet(dir.toString)
+    val listed = listCommitFiles(b.fs, b.root, dir, partitionCol)
+    if (listed.isEmpty) { b.fs.delete(dir, true); return listed }
+    val fresh = gatherFileMeta(spark, b.root, listed,
+      skipping.getOrElse(propagateSkipping(b.m, rows.schema)),
+      dataFileSchema(rows.schema, partitionCol))
+    if (check) enforceConstraints(spark, b.root, b.m, fresh, rows.schema.json)
+    fresh
+  }
+
+  /** The copy-on-write commit: `rows` go through [[writeFresh]] and
+    * publish beside the base entries the mutation `keep`s. */
+  private def rewrite(
+      spark: SparkSession, b: Base, keep: Seq[FileEntry], rows: DataFrame,
+      partitionCol: Option[String], op: String,
+      txn: Option[(String, Long)] = None, check: Boolean = true): Long =
+    commit(b, keep ++ writeFresh(spark, b, rows, partitionCol, check = check),
+      Some(rows.schema.json), op, txn = txn)
 
   /** Estimated distinct count (NDV) of all sketch-carrying columns at
     * a version, merged across the manifest's per-file [[HllRegs]]
@@ -1164,6 +1239,13 @@ object TxTable {
     }.sum
   }
 
+  /** Table property recording which 60-bit hash lane the per-file NDV
+    * sketches use ("xx" = xxhash64 production default, "md5" = the
+    * SQL-mirrorable oracle lane). Set by every [[commitReplace]] and
+    * honored by every rewrite ([[propagateSkipping]]): registers only
+    * compose across files hashed the same way. */
+  val NdvLaneProp = "graft.ndv.lane"
+
   /** Publish `df` as the COMPLETE next version (full replace; also the
     * init path for version 1). Partitioned layout when `partitionCol`
     * is set — required later for [[mergeChangeSet]]'s pruning.
@@ -1179,13 +1261,6 @@ object TxTable {
     * the false-positive rate — size it ~10× the expected distinct
     * keys per file for ~1 % FPP; a production deployment would
     * side-car filters past a few KB instead of inlining them. */
-  /** Table property recording which 60-bit hash lane the per-file NDV
-    * sketches use ("xx" = xxhash64 production default, "md5" = the
-    * SQL-mirrorable oracle lane). Set by every [[commitReplace]] and
-    * honored by every rewrite ([[propagateSkipping]]): registers only
-    * compose across files hashed the same way. */
-  val NdvLaneProp = "graft.ndv.lane"
-
   def commitReplace(
       spark: SparkSession, dir: String, df: DataFrame,
       partitionCol: Option[String] = None,
@@ -1193,45 +1268,24 @@ object TxTable {
       bloomCol: Option[String] = None,
       bloomBits: Int = 1 << 16,
       txn: Option[(String, Long)] = None,
-      ndvMirrorable: Boolean = false): Long = {
-    val (fs, root) = fsOf(spark, dir)
-    val store = logStoreFactory(fs)
-    val base = latestVersion(spark, dir).getOrElse(0L)
-    // idempotent-writer gate (see mergeChangeSet): a replayed refresh
-    // of a materialized view must not stack a second application —
-    // checked BEFORE any data is written, so the replay costs one log
-    // replay, not a wasted commit dir
-    if (base > 0L && txn.nonEmpty) {
-      val ledger = readManifest(spark, dir, base).txns
-      if (txn.exists { case (app, ver) => ledger.get(app).exists(_ >= ver) })
-        return base
-    }
-    val commitDir = newCommitDir(root, base + 1)
-    val writer = df.write.mode("errorifexists")
-    partitionCol.fold(writer)(c => writer.partitionBy(c))
-      .parquet(commitDir.toString)
-    val listed = listCommitFiles(fs, root, commitDir, partitionCol)
-    // always runs (even with no stats columns): the same SINGLE pass
-    // records each file's exact row count (what makes COUNT(*)
-    // metadata-only, [[metaCount]]), the stats columns' min/max + NDV
-    // registers, and the bloom when requested — one scan per commit,
-    // never two
-    val entries = gatherFileMeta(spark, root, listed, statsCols,
-      bloomCol.map(c => (c, bloomBits, 4)), ndvMirrorable,
-      fileSchema = Some(dataFileSchema(df.schema, partitionCol)))
+      ndvMirrorable: Boolean = false): Long =
     // the REAL base manifest (when one exists), not an empty stand-in:
     // a full commit wipes the file state but the idempotent-writer txn
-    // ledger must ride through into this commit's checkpoint
-    val baseManifest =
-      if (base == 0L) Manifest(0L, Seq.empty) else readManifest(spark, dir, base)
-    enforceConstraints(spark, root, baseManifest, entries, Some(df.schema.json))
-    // the lane prop is (re)stated on every full replace — a full
-    // commit DEFINES the file population, so its lane overrides any
-    // earlier one and rewrites propagate it consistently
-    commit(store, root, baseManifest, entries,
-      Some(df.schema.json), "replace", full = true, txn = txn,
-      extraProps = Map(NdvLaneProp -> (if (ndvMirrorable) "md5" else "xx")))
-  }
+    // ledger must ride through into this commit's checkpoint (and a
+    // replayed refresh of a materialized view must not stack a second
+    // application)
+    mutation(spark, dir, "commitReplace", txn, init = true) { b =>
+      // the same SINGLE pass records each file's exact row count (what
+      // makes COUNT(*) metadata-only, [[metaCount]]), the stats
+      // columns' min/max + NDV registers, and the bloom when requested
+      val fresh = writeFresh(spark, b, df, partitionCol, Some(Skipping(
+        statsCols, bloomCol.map(c => (c, bloomBits, 4)), ndvMirrorable)))
+      // the lane prop is (re)stated on every full replace — a full
+      // commit DEFINES the file population, so its lane overrides any
+      // earlier one and rewrites propagate it consistently
+      commit(b, fresh, Some(df.schema.json), "replace", full = true, txn = txn,
+        extraProps = Map(NdvLaneProp -> (if (ndvMirrorable) "md5" else "xx")))
+    }
 
   /** Bloom-pruned POINT lookup: read only files whose Bloom filter
     * might contain AT LEAST ONE of `values` (canonical string
@@ -1665,14 +1719,6 @@ object TxTable {
       spark.sessionState.conf.numShufflePartitions).fold(agged)(agged.coalesce)
   }
 
-  /** Read entries as one DataFrame. Files are grouped by their commit
-    * directory so each group reads with its own `basePath` (restoring
-    * the partition column the `col=value` layout encodes); the union
-    * is bounded by the number of commits still contributing files.
-    * Groups whose dir has a log-carried schema read WITHOUT opening a
-    * single parquet footer (the declared schema covers data + the
-    * partition column, which Spark fills from the dir value at the
-    * declared type); unknown dirs fall back to inference. */
   /** Reserved physical-row-identity columns projected by
     * `withRowId` reads: the ROOT-RELATIVE file path (exactly the
     * manifest's `FileEntry.path`, e.g. `data/v3-ab12cd34/pbucket=6/
@@ -1767,7 +1813,35 @@ object TxTable {
     }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** Read entries as one DataFrame, applying any deletion vectors.
+  /** True when a DV sidecar dir holds the bitmap form (a `bits`
+    * column in the parquet schema), decided by ONE driver-side footer
+    * read of the dir's first data file — no spark job. Any failure to
+    * decide (empty dir, unreadable footer) returns false, which routes
+    * the caller to the inferring legacy read — correct either way,
+    * just without the saved job. */
+  private def sidecarIsBitmapForm(fs: FileSystem, dir: Path): Boolean =
+    try {
+      fs.listStatus(dir).collectFirst {
+        case st if st.isFile && st.getLen > 0 &&
+            st.getPath.getName.startsWith("part-") =>
+          val in = org.apache.parquet.hadoop.util.HadoopInputFile
+            .fromStatus(st, fs.getConf)
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          try r.getFileMetaData.getSchema.containsField("bits")
+          finally r.close()
+      }.getOrElse(false)
+    } catch { case scala.util.control.NonFatal(_) => false }
+
+  /** Read entries as one DataFrame. Files are grouped by their commit
+    * directory so each group reads with its own `basePath` (restoring
+    * the partition column the `col=value` layout encodes); the union
+    * is bounded by the number of commits still contributing files.
+    * Groups whose dir has a log-carried schema read WITHOUT opening a
+    * single parquet footer (the declared schema covers data + the
+    * partition column, which Spark fills from the dir value at the
+    * declared type); unknown dirs fall back to inference.
+    *
+    * Read entries as one DataFrame, applying any deletion vectors.
     * Entries WITHOUT DVs read exactly as before (zero join, zero
     * metadata projection — the common case pays nothing); entries
     * WITH DVs read with (file, pos) row identity, join the per-FILE
@@ -1789,25 +1863,6 @@ object TxTable {
     * tables written before the bitmap format upgrade keep reading.
     * `withRowId` additionally exposes [[DvFileCol]]/[[DvPosCol]] to
     * DML writers. */
-  /** True when a DV sidecar dir holds the bitmap form (a `bits`
-    * column in the parquet schema), decided by ONE driver-side footer
-    * read of the dir's first data file — no spark job. Any failure to
-    * decide (empty dir, unreadable footer) returns false, which routes
-    * the caller to the inferring legacy read — correct either way,
-    * just without the saved job. */
-  private def sidecarIsBitmapForm(fs: FileSystem, dir: Path): Boolean =
-    try {
-      fs.listStatus(dir).collectFirst {
-        case st if st.isFile && st.getLen > 0 &&
-            st.getPath.getName.startsWith("part-") =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(st, fs.getConf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getFileMetaData.getSchema.containsField("bits")
-          finally r.close()
-      }.getOrElse(false)
-    } catch { case scala.util.control.NonFatal(_) => false }
-
   private def readFiles(
       spark: SparkSession, root: Path, files: Seq[FileEntry],
       schemas: Map[String, String] = Map.empty,
@@ -1966,28 +2021,6 @@ object TxTable {
     sliceOrEmpty(spark, root, hit, m.files, m.schemas)
   }
 
-  /** MERGE a changeset (the [[Cdc.applyChangeSet]] contract: `keyCol`,
-    * `opCol` ∈ insert/update/delete, full payload columns) into the
-    * table as one atomic commit. Only the files of TOUCHED partitions
-    * are read and rewritten; untouched entries carry forward by
-    * reference (and never appear in the delta manifest at all).
-    * Readers at any published version are unaffected; a concurrent
-    * commit on the same base makes this one throw
-    * [[CommitConflictException]] with the table left at the winner's
-    * version. Returns the new version.
-    *
-    * Partition-immutability contract (shared with
-    * [[graft.streaming.MergeStream]]): `partitionCol` must be a pure
-    * function of `keyCol` (every lane derives it as `key % N`), so an
-    * update/delete row always lands in the partition its stored row
-    * lives in. A changeset row carrying a DIFFERENT partition value
-    * for an existing key would leave the old row alive in a
-    * carried-forward file (the touched set comes from the changeset's
-    * partition values) — that is a key-relocation, which in a
-    * partition-pruned merge is modeled as delete-in-old + insert-in-new.
-    * Partition values must also be path-literal (integral / simple
-    * strings) — enforced below, because Spark ESCAPES exotic values in
-    * directory names while the manifest carries them raw. */
   /** Evaluate `changes` ONCE for the whole merge, and return its
     * distinct `partitionCol` values alongside: both merge paths
     * consume the changeset several times (the touched-partition
@@ -2047,60 +2080,78 @@ object TxTable {
           case None => touchedOf(ch)
         }
         body(ch, touched)
-      } finally org.apache.spark.sql.GraftCheckpointBridge.checkpointRdd(ch)
-        .foreach(_.unpersist(blocking = false))
+      } finally release(ch)
     }
   }
 
+  /** Drop a local checkpoint's blocks — the release half of every
+    * materialization a mutation owns. */
+  private def release(checkpointed: DataFrame): Unit =
+    org.apache.spark.sql.GraftCheckpointBridge.checkpointRdd(checkpointed)
+      .foreach(_.unpersist(blocking = false))
+
+  /** The slice a merge joins against: the files of the partitions its
+    * source names (`touched` — the distinct partition values, a
+    * bounded driver collect riding the materializing job or the
+    * caller's hint), plus the untouched entries, which carry forward
+    * by reference. */
+  private def touchedSlice(
+      spark: SparkSession, b: Base, touched: Seq[Any], partitionCol: String,
+      withRowId: Boolean = false): (DataFrame, Seq[FileEntry]) = {
+    val values = touched.map(String.valueOf(_)).toSet
+    requirePathSafe(values, partitionCol)
+    val (hit, keep) = b.m.files.partition(_.bucket.exists(values))
+    (sliceOrEmpty(spark, b.root, hit, b.m.files, b.m.schemas, withRowId), keep)
+  }
+
+  /** A rewrite of a partitioned table must name its partition column:
+    * bucket-less files would be invisible to partition-pruned merges. */
+  private def requirePartitionCol(
+      b: Base, dir: String, partitionCol: Option[String]): Unit =
+    require(b.m.files.forall(_.bucket.isEmpty) || partitionCol.isDefined,
+      s"table at $dir is partitioned — pass partitionCol so rewritten " +
+        "files keep the bucket dirs partition-pruned merges rely on")
+
+  /** MERGE a changeset (the [[Cdc.applyChangeSet]] contract: `keyCol`,
+    * `opCol` ∈ insert/update/delete, full payload columns) into the
+    * table as one atomic commit. Only the files of TOUCHED partitions
+    * are read and rewritten; untouched entries carry forward by
+    * reference (and never appear in the delta manifest at all).
+    * Readers at any published version are unaffected; a concurrent
+    * commit on the same base makes this one throw
+    * [[CommitConflictException]] with the table left at the winner's
+    * version. Returns the new version.
+    *
+    * Partition-immutability contract (shared with
+    * [[graft.streaming.MergeStream]]): `partitionCol` must be a pure
+    * function of `keyCol` (every lane derives it as `key % N`), so an
+    * update/delete row always lands in the partition its stored row
+    * lives in. A changeset row carrying a DIFFERENT partition value
+    * for an existing key would leave the old row alive in a
+    * carried-forward file (the touched set comes from the changeset's
+    * partition values) — that is a key-relocation, which in a
+    * partition-pruned merge is modeled as delete-in-old + insert-in-new.
+    * Partition values must also be path-literal (integral / simple
+    * strings) — enforced below, because Spark ESCAPES exotic values in
+    * directory names while the manifest carries them raw. */
   def mergeChangeSet(
       spark: SparkSession, dir: String, changes: DataFrame,
       keyCol: String, opCol: String, partitionCol: String,
       expectedBase: Option[Long] = None,
       evolveSchema: Boolean = false,
       txn: Option[(String, Long)] = None,
-      touchedHint: Option[Seq[Any]] = None): Long = {
-    val (fs, root) = fsOf(spark, dir)
-    val store = logStoreFactory(fs)
-    // expectedBase = optimistic concurrency from a version the caller
-    // read earlier: if someone else committed since, the publication
-    // of expectedBase+1 conflicts and this merge throws instead of
-    // silently dropping the competing commit's changes
-    val base = expectedBase.orElse(latestVersion(spark, dir)).getOrElse(
-      sys.error(s"mergeChangeSet needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
-    // idempotent-writer gate: an at-least-once producer (foreachBatch
-    // replaying its last batch after a crash between table commit and
-    // stream checkpoint) tags commits with a monotone (appId, version);
-    // a changeset whose version the ledger already records is a no-op
-    // at the current version instead of a DOUBLE APPLICATION (inserts
-    // would duplicate — applyChangeSet treats them as new keys)
-    if (txn.exists { case (app, ver) => m.txns.get(app).exists(_ >= ver) })
-      return base
-    // bounded driver collect: ≤ #partition values by definition —
-    // rides the materializing job (or the caller's hint)
-    withMaterializedChanges(changes, partitionCol, touchedHint) { (ch, touchedRaw) =>
-    val touched = touchedRaw.map(String.valueOf(_)).toSet
-    requirePathSafe(touched, partitionCol)
-    val (touchedFiles, keep) = m.files.partition(_.bucket.exists(touched))
-    val slice = sliceOrEmpty(spark, root, touchedFiles, m.files, m.schemas)
-    // no overwrite-from-own-input here, ever: the merge READS version
-    // `base`'s files and WRITES a brand-new commit dir — the
-    // localCheckpoint the dynamic-overwrite path needed is gone
-    // schema evolution here touches only the REWRITTEN partitions'
-    // files; carried-forward files keep the old shape and read NULL in
-    // the new columns through readFiles' allowMissingColumns union
-    val merged = Cdc.applyChangeSet(slice, ch, keyCol, opCol, evolveSchema)
-    val commitDir = newCommitDir(root, base + 1)
-    merged.write.mode("errorifexists")
-      .partitionBy(partitionCol).parquet(commitDir.toString)
-    val fresh = propagateSkipping(spark, root, m,
-      listCommitFiles(fs, root, commitDir, Some(partitionCol)),
-      merged.schema, Some(partitionCol))
-    enforceConstraints(spark, root, m, fresh, Some(merged.schema.json))
-    commit(store, root, m, keep ++ fresh, Some(merged.schema.json),
-      "merge", full = false, txn = txn)
+      touchedHint: Option[Seq[Any]] = None): Long =
+    mutation(spark, dir, "mergeChangeSet", txn, expectedBase) { b =>
+      withMaterializedChanges(changes, partitionCol, touchedHint) { (ch, touched) =>
+        val (slice, keep) = touchedSlice(spark, b, touched, partitionCol)
+        // schema evolution here touches only the REWRITTEN partitions'
+        // files; carried-forward files keep the old shape and read NULL
+        // in the new columns through readFiles' allowMissingColumns union
+        rewrite(spark, b, keep,
+          Cdc.applyChangeSet(slice, ch, keyCol, opCol, evolveSchema),
+          Some(partitionCol), "merge", txn)
+      }
     }
-  }
 
   /** [[mergeChangeSet]] at MERGE-ON-READ economics — identical content
     * semantics ([[Cdc.applyChangeSet]]: update/delete keys vacate the
@@ -2134,13 +2185,9 @@ object TxTable {
       evolveSchema: Boolean = false,
       txn: Option[(String, Long)] = None,
       touchedHint: Option[Seq[Any]] = None): Long =
-    stageMergeDv(spark, dir, changes, keyCol, opCol, partitionCol,
-      evolveSchema, txn, touchedHint) match {
-      case None => latestVersion(spark, dir).getOrElse(
-        sys.error(s"mergeChangeSetDv needs an initialized table at $dir"))
-      case Some(staged) =>
-        val (store, root) = storeOf(spark, dir)
-        publishStaged(store, root, staged)
+    mutation(spark, dir, "mergeChangeSetDv") { b =>
+      publishOr(b, stageMergeDv(spark, b, changes, keyCol, opCol, partitionCol,
+        evolveSchema, txn, touchedHint))
     }
 
   /** [[mergeChangeSetDv]]'s WRITE PHASE factored out (r18): tombstone
@@ -2154,73 +2201,84 @@ object TxTable {
     * tombstones nothing and inserts nothing) — any just-written
     * sidecar/commit debris is already deleted on that path. */
   private[ext] def stageMergeDv(
-      spark: SparkSession, dir: String, changes: DataFrame,
+      spark: SparkSession, b: Base, changes: DataFrame,
       keyCol: String, opCol: String, partitionCol: String,
       evolveSchema: Boolean = false,
       txn: Option[(String, Long)] = None,
-      touchedHint: Option[Seq[Any]] = None): Option[StagedCommit] = {
-    val (fs, root) = fsOf(spark, dir)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"mergeChangeSetDv needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
-    if (txn.exists { case (app, ver) => m.txns.get(app).exists(_ >= ver) })
-      return None
-    // bounded driver collect: ≤ #partition values by definition —
-    // rides the materializing job (or the caller's hint)
-    withMaterializedChanges(changes, partitionCol, touchedHint) { (ch, touchedRaw) =>
-    val touched = touchedRaw.map(String.valueOf(_)).toSet
-    requirePathSafe(touched, partitionCol)
-    val touchedFiles = m.files.filter(_.bucket.exists(touched))
-    val slice = sliceOrEmpty(spark, root, touchedFiles, m.files, m.schemas,
-      withRowId = true)
-    val targetCols = slice.columns
-      .filterNot(c => c == DvFileCol || c == DvPosCol).toSeq
-    val extras = ch.columns.filterNot(c =>
-      c == opCol || targetCols.contains(c)).toSeq
-    require(extras.isEmpty || evolveSchema,
-      s"changeset carries columns the target lacks (${extras.mkString(", ")}) " +
-        "— pass evolveSchema=true for additive evolution (new columns " +
-        "ride the fresh files; carried rows read NULL)")
-    // ONE semi-join finds every target row a vacating key claims —
-    // tombstones are naturally distinct regardless of changeset dups
-    val gone = ch.where(col(opCol).isin("update", "delete"))
-      .select(col(keyCol))
-    val doomed = slice.join(gone, Seq(keyCol), "left_semi")
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val dvRel = s"dv/v${base + 1}-$token"
-    val dvPath = new Path(root, dvRel)
-    val counts = writeDvSidecar(spark, root, dvRel, doomed)
-    val tSchema = slice.schema
-    val added = ch.where(col(opCol).isin("insert", "update"))
-      .select(targetCols.map(c =>
-        col(c).cast(tSchema(c).dataType).as(c)) ++ extras.map(col): _*)
-    val commitDir = newCommitDir(root, base + 1)
-    added.write.mode("errorifexists").partitionBy(partitionCol)
-      .parquet(commitDir.toString)
-    val fresh = propagateSkipping(spark, root, m,
-      listCommitFiles(fs, root, commitDir, Some(partitionCol)),
-      added.schema, Some(partitionCol))
-    if (counts.isEmpty && fresh.isEmpty) {
-      // no tombstones, nothing appended: the commit would be a no-op —
-      // delete the debris and stage nothing
-      fs.delete(dvPath, true); fs.delete(commitDir, true); None
-    } else {
-      if (counts.isEmpty) fs.delete(dvPath, true)
-      enforceConstraints(spark, root, m, fresh, Some(added.schema.json))
-      val updated = m.files.map { f =>
-        counts.get(f.path) match {
-          case Some(n) => f.copy(dvs = f.dvs :+ DvRef(dvRel, n))
-          case None => f
-        }
+      touchedHint: Option[Seq[Any]] = None): Option[StagedCommit] =
+    if (b.applied(txn)) None
+    else withMaterializedChanges(changes, partitionCol, touchedHint) { (ch, touched) =>
+      val slice = touchedSlice(spark, b, touched, partitionCol, withRowId = true)._1
+      val targetCols = slice.columns
+        .filterNot(c => c == DvFileCol || c == DvPosCol).toSeq
+      val extras = ch.columns.filterNot(c =>
+        c == opCol || targetCols.contains(c)).toSeq
+      require(extras.isEmpty || evolveSchema,
+        s"changeset carries columns the target lacks (${extras.mkString(", ")}) " +
+          "— pass evolveSchema=true for additive evolution (new columns " +
+          "ride the fresh files; carried rows read NULL)")
+      // ONE semi-join finds every target row a vacating key claims —
+      // tombstones are naturally distinct regardless of changeset dups
+      val gone = ch.where(col(opCol).isin("update", "delete"))
+        .select(col(keyCol))
+      tombstone(spark, b, slice.join(gone, Seq(keyCol), "left_semi")) { (_, tombstoned) =>
+        val tSchema = slice.schema
+        val added = ch.where(col(opCol).isin("insert", "update"))
+          .select(targetCols.map(c =>
+            col(c).cast(tSchema(c).dataType).as(c)) ++ extras.map(col): _*)
+        stageDv(spark, b, tombstoned, Some(added), Some(partitionCol),
+          "merge-cs-dv", txn)
       }
-      Some(stageCommit(m, updated ++ fresh, newSchema = None,
-        op = "merge-cs-dv", full = false,
-        extraSchemas = fresh.headOption
-          .map(f => dirOf(f.path) -> added.schema.json).toMap,
-        txn = txn))
     }
-    }
+
+  /** The tombstone step of every merge-on-read mutation: `doomed`'s
+    * ([[DvFileCol]], [[DvPosCol]]) rows go into a fresh sidecar for
+    * version base+1 ([[writeDvSidecar]]), then `body` gets the frame and
+    * the base entries with the new [[DvRef]]s stacked — None when
+    * nothing was tombstoned (the empty sidecar is removed). When
+    * `reuse`, the frame feeds more than the sidecar (`validate`, new row
+    * images), so it is materialized ONCE up front and its blocks are
+    * released when `body` exits, on success or failure. `validate` runs
+    * before anything is written. */
+  private def tombstone[T](
+      spark: SparkSession, b: Base, doomed: DataFrame, reuse: Boolean = false,
+      validate: DataFrame => Unit = _ => ())(
+      body: (DataFrame, Option[Seq[FileEntry]]) => T): T = {
+    val frame = if (reuse) doomed.localCheckpoint() else doomed
+    try {
+      validate(frame)
+      val dvRel = s"dv/v${b.m.version + 1}-" +
+        java.util.UUID.randomUUID().toString.take(8)
+      val counts = writeDvSidecar(spark, b.root, dvRel, frame)
+      if (counts.isEmpty) b.fs.delete(new Path(b.root, dvRel), true)
+      body(frame, Option.when(counts.nonEmpty)(b.m.files.map(f =>
+        counts.get(f.path).fold(f)(n => f.copy(dvs = f.dvs :+ DvRef(dvRel, n))))))
+    } finally if (reuse) release(frame)
   }
+
+  /** Stage a merge-on-read commit: the base entries with this commit's
+    * tombstones stacked (`tombstoned`; None = the base entries as they
+    * are) plus the fresh files `rows` write ([[writeFresh]]). None when
+    * the commit would change nothing. The header schema stays None: the
+    * delta's adds include DV-ref-modified entries from OLDER commit
+    * dirs, and a header-level schema would be replayed onto ALL add
+    * dirs — the fresh dir's schema rides the per-dir map instead. */
+  private def stageDv(
+      spark: SparkSession, b: Base, tombstoned: Option[Seq[FileEntry]],
+      rows: Option[DataFrame], partitionCol: Option[String], op: String,
+      txn: Option[(String, Long)] = None): Option[StagedCommit] = {
+    val fresh = rows.fold(Seq.empty[FileEntry])(writeFresh(spark, b, _, partitionCol))
+    Option.when(tombstoned.nonEmpty || fresh.nonEmpty)(stageCommit(b.m,
+      tombstoned.getOrElse(b.m.files) ++ fresh, newSchema = None, op, full = false,
+      extraSchemas = fresh.headOption.zip(rows)
+        .map { case (f, r) => dirOf(f.path) -> r.schema.json }.toMap,
+      txn = txn))
+  }
+
+  /** Publish `staged`, or return the base version when there is
+    * nothing to publish. */
+  private def publishOr(b: Base, staged: Option[StagedCommit]): Long =
+    staged.fold(b.m.version)(publishStaged(b.store, b.root, _))
 
   /** The standard multi-writer optimistic-concurrency loop, usable
     * around ANY single mutation here (DML, merges — COW and MoR —,
@@ -2244,20 +2302,36 @@ object TxTable {
     sys.error("unreachable")
   }
 
-  /** [[mergeChangeSet]] under [[withConflictRetry]] — kept as a named
-    * convenience because it is the multi-writer workhorse. Writers
-    * whose changesets touch the same KEYS still serialize correctly:
-    * last committed merge wins per key, exactly as sequential
-    * application would. */
-  def mergeChangeSetWithRetry(
-      spark: SparkSession, dir: String, changes: DataFrame,
-      keyCol: String, opCol: String, partitionCol: String,
-      maxRetries: Int = 5, evolveSchema: Boolean = false,
-      txn: Option[(String, Long)] = None): Long =
-    withConflictRetry(maxRetries) {
-      mergeChangeSet(spark, dir, changes, keyCol, opCol,
-        partitionCol, evolveSchema = evolveSchema, txn = txn)
-    }
+  /** MERGE INTO's clause algebra, shared by [[mergeInto]] and
+    * [[mergeIntoDv]]: the source wrapped as struct `s`; the delete,
+    * update and insert predicates (a NULL condition is false, and an
+    * update clause without assignments never fires); and per target
+    * column, the value an insert takes from the source (its same-named
+    * column, else NULL) and the value an update assigns (unassigned
+    * columns keep the target's). Right-hand sides see the OLD `t` and
+    * the `s` structs. */
+  private final case class MergeClauses(
+      source: DataFrame, delete: Column, update: Column, insert: Column,
+      inserted: Seq[Column], updated: Seq[Column])
+
+  private def mergeClauses(
+      target: Seq[org.apache.spark.sql.types.StructField], source: DataFrame,
+      whenMatchedDelete: Option[Column], whenMatchedUpdate: Seq[(String, Column)],
+      whenMatchedUpdateCond: Option[Column],
+      whenNotMatchedInsert: Option[Column]): MergeClauses = {
+    def orFalse(c: Option[Column]) = coalesce(c.getOrElse(lit(false)), lit(false))
+    val assign = whenMatchedUpdate.toMap
+    MergeClauses(
+      source.select(struct(source.columns.map(col).toIndexedSeq: _*).as("s")),
+      orFalse(whenMatchedDelete),
+      orFalse(Option.when(whenMatchedUpdate.nonEmpty)(
+        whenMatchedUpdateCond.getOrElse(lit(true)))),
+      orFalse(whenNotMatchedInsert),
+      target.map(f => (if (source.columns.contains(f.name)) col("s").getField(f.name)
+        else lit(null)).cast(f.dataType)),
+      target.map(f =>
+        assign.getOrElse(f.name, col("t").getField(f.name)).cast(f.dataType)))
+  }
 
   /** Conditional MERGE INTO (the SQL `MERGE INTO t USING s ON
     * t.key = s.key WHEN MATCHED [AND cond] THEN UPDATE/DELETE WHEN NOT
@@ -2299,60 +2373,31 @@ object TxTable {
       whenMatchedUpdate: Seq[(String, org.apache.spark.sql.Column)] = Seq.empty,
       whenMatchedUpdateCond: Option[org.apache.spark.sql.Column] = None,
       whenNotMatchedInsert: Option[org.apache.spark.sql.Column] = None,
-      txn: Option[(String, Long)] = None): Long = {
-    val (fs, root) = fsOf(spark, dir)
-    val store = logStoreFactory(fs)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"mergeInto needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
-    if (txn.exists { case (app, ver) => m.txns.get(app).exists(_ >= ver) })
-      return base
-    // bounded driver collect: ≤ #partition values by definition
-    val touched = source.select(col(partitionCol)).distinct()
-      .collect().map(r => String.valueOf(r.get(0))).toSet
-    requirePathSafe(touched, partitionCol)
-    val (touchedFiles, keep) = m.files.partition(_.bucket.exists(touched))
-    val slice = sliceOrEmpty(spark, root, touchedFiles, m.files, m.schemas)
-    val targetSchema = slice.schema
-    val joined = slice.select(struct(slice.columns.map(col): _*).as("t"))
-      .join(source.select(struct(source.columns.map(col): _*).as("s")),
-        col("t").getField(keyCol) === col("s").getField(keyCol), "full_outer")
-    val deleteCond = coalesce(
-      whenMatchedDelete.getOrElse(lit(false)), lit(false))
-    val updateCond = coalesce(
-      if (whenMatchedUpdate.isEmpty) lit(false)
-      else whenMatchedUpdateCond.getOrElse(lit(true)), lit(false))
-    val insertCond = coalesce(
-      whenNotMatchedInsert.getOrElse(lit(false)), lit(false))
-    val matched = col("t").isNotNull && col("s").isNotNull
-    val keepRow =
-      when(col("t").isNull, insertCond)    // source-only: insert or drop
-        .when(col("s").isNull, lit(true))  // target-only: carry
-        .otherwise(!deleteCond)            // matched: delete wins first
-    val assign = whenMatchedUpdate.toMap
-    val srcCols = source.columns.toSet
-    val outCols = targetSchema.fields.map { f =>
-      val fromT = col("t").getField(f.name)
-      val fromS =
-        if (srcCols.contains(f.name)) col("s").getField(f.name).cast(f.dataType)
-        else lit(null).cast(f.dataType)
-      when(col("t").isNull, fromS)
-        .when(matched && !deleteCond && updateCond,
-          assign.getOrElse(f.name, fromT).cast(f.dataType))
-        .otherwise(fromT)
-        .as(f.name)
+      txn: Option[(String, Long)] = None): Long =
+    mutation(spark, dir, "mergeInto", txn) { b =>
+      withMaterializedChanges(source, partitionCol) { (src, touched) =>
+        val (slice, keep) = touchedSlice(spark, b, touched, partitionCol)
+        val target = slice.schema.fields.toSeq
+        val c = mergeClauses(target, src, whenMatchedDelete, whenMatchedUpdate,
+          whenMatchedUpdateCond, whenNotMatchedInsert)
+        val joined = slice.select(struct(slice.columns.map(col).toIndexedSeq: _*).as("t"))
+          .join(c.source,
+            col("t").getField(keyCol) === col("s").getField(keyCol), "full_outer")
+        val matched = col("t").isNotNull && col("s").isNotNull
+        val keepRow =
+          when(col("t").isNull, c.insert)      // source-only: insert or drop
+            .when(col("s").isNull, lit(true))  // target-only: carry
+            .otherwise(!c.delete)              // matched: delete wins first
+        val outCols = target.indices.map { i =>
+          when(col("t").isNull, c.inserted(i))
+            .when(matched && !c.delete && c.update, c.updated(i))
+            .otherwise(col("t").getField(target(i).name))
+            .as(target(i).name)
+        }
+        rewrite(spark, b, keep, joined.where(keepRow).select(outCols: _*),
+          Some(partitionCol), "merge", txn)
+      }
     }
-    val merged = joined.where(keepRow).select(outCols.toIndexedSeq: _*)
-    val commitDir = newCommitDir(root, base + 1)
-    merged.write.mode("errorifexists")
-      .partitionBy(partitionCol).parquet(commitDir.toString)
-    val fresh = propagateSkipping(spark, root, m,
-      listCommitFiles(fs, root, commitDir, Some(partitionCol)),
-      merged.schema, Some(partitionCol))
-    enforceConstraints(spark, root, m, fresh, Some(merged.schema.json))
-    commit(store, root, m, keep ++ fresh, Some(merged.schema.json),
-      "merge", full = false, txn = txn)
-  }
 
   /** OPTIMIZE: rewrite every partition holding more than one file
     * into a single file per partition, published as a normal commit —
@@ -2369,33 +2414,20 @@ object TxTable {
     * [[graft.ingest.Compaction]]'s byte math — here the streaming-
     * sink fragmentation case (many tiny files per partition) is the
     * one the commit log itself creates. */
-  def compact(spark: SparkSession, dir: String, partitionCol: String): Long = {
-    val (fs, root) = fsOf(spark, dir)
-    val store = logStoreFactory(fs)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"compact needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
-    val byBucket = m.files.groupBy(_.bucket)
-    // a partition needs work when fragmented OR carrying deletion
-    // vectors: compaction is also the DV reconciler — the rewrite
-    // reads DV-aware, so tombstoned rows vanish physically and the
-    // fresh entries are DV-free
-    val fragmented = byBucket.filter { case (_, fs0) =>
-      fs0.size > 1 || fs0.exists(_.dvs.nonEmpty)
-    }.keys.toSet
-    if (fragmented.isEmpty) return base
-    val (doomed, keep) = m.files.partition(f => fragmented(f.bucket))
-    val merged = readFiles(spark, root, doomed, m.schemas)
-      .repartition(col(partitionCol))
-    val commitDir = newCommitDir(root, base + 1)
-    merged.write.mode("errorifexists")
-      .partitionBy(partitionCol).parquet(commitDir.toString)
-    val fresh = propagateSkipping(spark, root, m,
-      listCommitFiles(fs, root, commitDir, Some(partitionCol)),
-      merged.schema, Some(partitionCol))
-    commit(store, root, m, keep ++ fresh, Some(merged.schema.json),
-      "compact", full = false)
-  }
+  def compact(spark: SparkSession, dir: String, partitionCol: String): Long =
+    mutation(spark, dir, "compact") { b =>
+      // a partition needs work when fragmented OR carrying deletion
+      // vectors: compaction is also the DV reconciler — the rewrite
+      // reads DV-aware, so tombstoned rows vanish physically and the
+      // fresh entries are DV-free
+      val fragmented = b.m.files.groupBy(_.bucket).filter { case (_, fs0) =>
+        fs0.size > 1 || fs0.exists(_.dvs.nonEmpty)
+      }.keySet
+      val (doomed, keep) = b.m.files.partition(f => fragmented(f.bucket))
+      if (doomed.isEmpty) b.m.version
+      else rewrite(spark, b, keep, readFiles(spark, b.root, doomed, b.m.schemas)
+        .repartition(col(partitionCol)), Some(partitionCol), "compact", check = false)
+    }
 
   /** REORG … APPLY (PURGE): physically materialize the deletion
     * vectors by rewriting ONLY the files that carry them — finer than
@@ -2412,30 +2444,18 @@ object TxTable {
     * contract as the lakehouse formats' REORG + VACUUM. */
   def purgeTombstoned(
       spark: SparkSession, dir: String,
-      partitionCol: Option[String] = None): Long = {
-    val (fs, root) = fsOf(spark, dir)
-    val store = logStoreFactory(fs)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"purgeTombstoned needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
-    val (doomed, keep) = m.files.partition(_.dvs.nonEmpty)
-    if (doomed.isEmpty) return base // nothing tombstoned — no-op
-    require(m.files.forall(_.bucket.isEmpty) || partitionCol.isDefined,
-      s"table at $dir is partitioned — pass partitionCol so the purged " +
-        "files keep the bucket dirs partition-pruned merges rely on")
-    // DV-aware read of ONLY the carrying files: tombstoned rows vanish
-    // physically, surviving rows rewrite verbatim
-    val merged = readFiles(spark, root, doomed, m.schemas)
-    val commitDir = newCommitDir(root, base + 1)
-    val writer = merged.write.mode("errorifexists")
-    partitionCol.fold(writer)(c => writer.partitionBy(c))
-      .parquet(commitDir.toString)
-    val fresh = propagateSkipping(spark, root, m,
-      listCommitFiles(fs, root, commitDir, partitionCol),
-      merged.schema, partitionCol)
-    commit(store, root, m, keep ++ fresh, Some(merged.schema.json),
-      "purge", full = false)
-  }
+      partitionCol: Option[String] = None): Long =
+    mutation(spark, dir, "purgeTombstoned") { b =>
+      val (doomed, keep) = b.m.files.partition(_.dvs.nonEmpty)
+      if (doomed.isEmpty) b.m.version // nothing tombstoned — no-op
+      else {
+        requirePartitionCol(b, dir, partitionCol)
+        // DV-aware read of ONLY the carrying files: tombstoned rows
+        // vanish physically, surviving rows rewrite verbatim
+        rewrite(spark, b, keep, readFiles(spark, b.root, doomed, b.m.schemas),
+          partitionCol, "purge", check = false)
+      }
+    }
 
   /** Maintenance POLICY over the manifest alone: sweep when the layout
     * has decayed past either threshold, with the CHEAPEST op that
@@ -2514,29 +2534,18 @@ object TxTable {
       spark: SparkSession, dir: String, partitionCol: Option[String],
       clusterX: String, clusterY: String, targetFiles: Int): Long = {
     require(targetFiles > 0, "targetFiles must be positive")
-    val (fs, root) = fsOf(spark, dir)
-    val store = logStoreFactory(fs)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"compactClustered needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
-    if (m.files.isEmpty) return base // nothing to re-cluster
-    require(m.files.forall(_.bucket.isEmpty) || partitionCol.isDefined,
-      s"table at $dir is partitioned — pass partitionCol so the " +
-        "re-layout keeps the bucket dirs partition-pruned merges rely on")
-    val zc = Layout.zValue(col(clusterX), col(clusterY))
-    val keys = partitionCol.map(col).toSeq :+ zc
-    val ordered = readFiles(spark, root, m.files, m.schemas)
-      .repartitionByRange(targetFiles, keys: _*)
-      .sortWithinPartitions(keys: _*)
-    val commitDir = newCommitDir(root, base + 1)
-    val writer = ordered.write.mode("errorifexists")
-    partitionCol.fold(writer)(c => writer.partitionBy(c))
-      .parquet(commitDir.toString)
-    val fresh = propagateSkipping(spark, root, m,
-      listCommitFiles(fs, root, commitDir, partitionCol),
-      ordered.schema, partitionCol)
-    commit(store, root, m, fresh, Some(ordered.schema.json),
-      "optimize-zorder", full = false)
+    mutation(spark, dir, "compactClustered") { b =>
+      if (b.m.files.isEmpty) b.m.version // nothing to re-cluster
+      else {
+        requirePartitionCol(b, dir, partitionCol)
+        val keys = partitionCol.map(col).toSeq :+
+          Layout.zValue(col(clusterX), col(clusterY))
+        rewrite(spark, b, Seq.empty, readFiles(spark, b.root, b.m.files, b.m.schemas)
+          .repartitionByRange(targetFiles, keys: _*)
+          .sortWithinPartitions(keys: _*),
+          partitionCol, "optimize-zorder", check = false)
+      }
+    }
   }
 
   /** CDC READ: the net changeset that turns version `vFrom` into
@@ -2656,42 +2665,27 @@ object TxTable {
   private def rewriteTouched(
       spark: SparkSession, dir: String, pred: org.apache.spark.sql.Column,
       partitionCol: Option[String], op: String)(
-      transform: DataFrame => DataFrame): Long = {
-    val (fs, root) = fsOf(spark, dir)
-    val store = logStoreFactory(fs)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"DML needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
-    if (m.files.isEmpty) return base // nothing to match on an emptied table
-    require(m.files.forall(_.bucket.isEmpty) || partitionCol.isDefined,
-      s"table at $dir is partitioned — pass partitionCol so rewritten " +
-        "files keep the layout (a bucket-less rewrite would be invisible " +
-        "to partition-pruned merges)")
-    // row-identity projection instead of input_file_name(): the latter
-    // is scan-scoped and goes ambiguous once a DV anti-join sits
-    // between the scan and the collect
-    val touchedPaths = readFiles(spark, root, m.files, m.schemas,
-        withRowId = true)
-      .where(pred)
-      .select(col(DvFileCol)).distinct()
-      .collect().map(_.getString(0)).toSet
-    if (touchedPaths.isEmpty) return base
-    // root-relative match — bare NAMES collide across partition dirs
-    // of one write job, which would rewrite every same-named sibling
-    def isTouched(f: FileEntry): Boolean = touchedPaths(f.path)
-    val (doomed, keep) = m.files.partition(isTouched)
-    val rewritten = transform(readFiles(spark, root, doomed, m.schemas))
-    val commitDir = newCommitDir(root, base + 1)
-    val writer = rewritten.write.mode("errorifexists")
-    partitionCol.fold(writer)(c => writer.partitionBy(c))
-      .parquet(commitDir.toString)
-    val fresh = propagateSkipping(spark, root, m,
-      listCommitFiles(fs, root, commitDir, partitionCol),
-      rewritten.schema, partitionCol)
-    enforceConstraints(spark, root, m, fresh, Some(rewritten.schema.json))
-    commit(store, root, m, keep ++ fresh,
-      Some(rewritten.schema.json), op, full = false)
-  }
+      transform: DataFrame => DataFrame): Long =
+    mutation(spark, dir, "DML") { b =>
+      if (b.m.files.isEmpty) b.m.version // nothing to match on an emptied table
+      else {
+        requirePartitionCol(b, dir, partitionCol)
+        // row-identity projection instead of input_file_name(): the latter
+        // is scan-scoped and goes ambiguous once a DV anti-join sits
+        // between the scan and the collect
+        val touchedPaths = readFiles(spark, b.root, b.m.files, b.m.schemas,
+            withRowId = true)
+          .where(pred)
+          .select(col(DvFileCol)).distinct()
+          .collect().map(_.getString(0)).toSet
+        // root-relative match — bare NAMES collide across partition dirs
+        // of one write job, which would rewrite every same-named sibling
+        val (doomed, keep) = b.m.files.partition(f => touchedPaths(f.path))
+        if (doomed.isEmpty) b.m.version
+        else rewrite(spark, b, keep,
+          transform(readFiles(spark, b.root, doomed, b.m.schemas)), partitionCol, op)
+      }
+    }
 
   /** DELETE WHERE as an atomic commit: rows matching `pred` are
     * removed; only files CONTAINING matches are rewritten (file-level
@@ -2725,32 +2719,39 @@ object TxTable {
     * matched. */
   def deleteWhereDv(
       spark: SparkSession, dir: String,
-      pred: org.apache.spark.sql.Column): Long = {
-    val (fs, root) = fsOf(spark, dir)
-    val store = logStoreFactory(fs)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"DML needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
-    if (m.files.isEmpty) return base // nothing to tombstone
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val dvRel = s"dv/v${base + 1}-$token"
-    val dvPath = new Path(root, dvRel)
-    // ONE predicate scan over the currently VISIBLE rows (the DV-aware
-    // read excludes prior tombstones, keeping stacked counts disjoint)
-    val counts = writeDvSidecar(spark, root, dvRel,
-      readFiles(spark, root, m.files, m.schemas, withRowId = true)
-        .where(coalesce(pred, lit(false))))
-    if (counts.isEmpty) { fs.delete(dvPath, true); return base }
-    val updated = m.files.map { f =>
-      counts.get(f.path) match {
-        case Some(n) => f.copy(dvs = f.dvs :+ DvRef(dvRel, n))
-        case None => f
+      pred: org.apache.spark.sql.Column): Long =
+    mutation(spark, dir, "DML") { b =>
+      if (b.m.files.isEmpty) b.m.version // nothing to tombstone
+      // ONE predicate scan over the currently VISIBLE rows (the DV-aware
+      // read excludes prior tombstones, keeping stacked counts disjoint);
+      // no constraint pass: a pure delete writes no fresh data files
+      else tombstone(spark, b, readFiles(spark, b.root, b.m.files, b.m.schemas,
+          withRowId = true).where(coalesce(pred, lit(false)))) { (_, tombstoned) =>
+        publishOr(b, stageDv(spark, b, tombstoned, None, None, "delete-dv"))
       }
     }
-    // no constraint pass: a pure delete cannot introduce a violating
-    // row, and no fresh data files exist to validate
-    commit(store, root, m, updated, newSchema = None, op = "delete-dv",
-      full = false)
+
+  /** SQL UPDATE's assignment staging, shared by [[updateWhere]] and
+    * [[updateWhereDv]]: every right-hand side is evaluated into a temp
+    * column against the OLD row BEFORE any target column mutates, so a
+    * later assignment never sees an earlier one's write (a naive
+    * sequential `withColumn(c, when(pred, e))` fold would re-evaluate
+    * `pred` and RHS against already-mutated columns). With a `gate`,
+    * rows where it is not definitively true keep their old values. */
+  private def assign(
+      df: DataFrame, assignments: Seq[(String, Column)],
+      gate: Option[Column]): DataFrame = {
+    val staged = assignments.zipWithIndex.map { case ((c, e), i) =>
+      (c, s"__graft_set_$i", e)
+    }
+    val withOld = staged.foldLeft(gate.fold(df)(g =>
+      df.withColumn("__graft_pred", coalesce(g, lit(false))))) {
+      case (d, (_, tmp, e)) => d.withColumn(tmp, e)
+    }
+    staged.foldLeft(withOld) { case (d, (c, tmp, _)) =>
+      d.withColumn(c, gate.fold(col(tmp))(_ =>
+        when(col("__graft_pred"), col(tmp)).otherwise(col(c))))
+    }.drop("__graft_pred" +: staged.map(_._2): _*)
   }
 
   /** UPDATE ... SET assignments WHERE pred, same economics as
@@ -2767,19 +2768,8 @@ object TxTable {
       spark: SparkSession, dir: String, pred: org.apache.spark.sql.Column,
       assignments: Seq[(String, org.apache.spark.sql.Column)],
       partitionCol: Option[String] = None): Long =
-    rewriteTouched(spark, dir, pred, partitionCol, "update") { df =>
-      val staged = assignments.zipWithIndex.map { case ((c, e), i) =>
-        (c, s"__graft_set_$i", e)
-      }
-      val withOldValues = staged.foldLeft(
-        df.withColumn("__graft_pred", coalesce(pred, lit(false)))) {
-        case (d, (_, tmp, e)) => d.withColumn(tmp, e)
-      }
-      val applied = staged.foldLeft(withOldValues) { case (d, (c, tmp, _)) =>
-        d.withColumn(c, when(col("__graft_pred"), col(tmp)).otherwise(col(c)))
-      }
-      applied.drop("__graft_pred" +: staged.map(_._2): _*)
-    }
+    rewriteTouched(spark, dir, pred, partitionCol, "update")(
+      assign(_, assignments, Some(pred)))
 
   /** UPDATE ... SET as MERGE-ON-READ, completing the DV DML family:
     * the matched rows' OLD images are tombstoned in a deletion-vector
@@ -2803,62 +2793,25 @@ object TxTable {
       spark: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column,
       assignments: Seq[(String, org.apache.spark.sql.Column)],
-      partitionCol: Option[String] = None): Long = {
-    val (fs, root) = fsOf(spark, dir)
-    val store = logStoreFactory(fs)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"DML needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
-    if (m.files.isEmpty) return base // nothing to match on an emptied table
-    require(m.files.forall(_.bucket.isEmpty) || partitionCol.isDefined,
-      s"table at $dir is partitioned — pass partitionCol so the new " +
-        "images keep the layout (bucket-less appends would be invisible " +
-        "to partition-pruned merges)")
-    // ONE predicate scan over the visible rows, materialized because
-    // it feeds BOTH the sidecar and the image write (O(matches) —
-    // the frame a MoR update exists to keep small)
-    val matched = readFiles(spark, root, m.files, m.schemas,
-        withRowId = true)
-      .where(coalesce(pred, lit(false)))
-      .localCheckpoint()
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val dvRel = s"dv/v${base + 1}-$token"
-    val dvPath = new Path(root, dvRel)
-    val counts = writeDvSidecar(spark, root, dvRel, matched)
-    if (counts.isEmpty) { fs.delete(dvPath, true); return base }
-    // new images: RHS staged against the OLD row (no when() gate —
-    // every row here matched), reserved row-id columns dropped
-    val staged = assignments.zipWithIndex.map { case ((c, e), i) =>
-      (c, s"__graft_set_$i", e)
-    }
-    val withOld = staged.foldLeft(matched.drop(DvFileCol, DvPosCol)) {
-      case (d, (_, tmp, e)) => d.withColumn(tmp, e)
-    }
-    val images = staged.foldLeft(withOld) { case (d, (c, tmp, _)) =>
-      d.withColumn(c, col(tmp))
-    }.drop(staged.map(_._2): _*)
-    val commitDir = newCommitDir(root, base + 1)
-    val writer = images.write.mode("errorifexists")
-    partitionCol.fold(writer)(c => writer.partitionBy(c))
-      .parquet(commitDir.toString)
-    val fresh = propagateSkipping(spark, root, m,
-      listCommitFiles(fs, root, commitDir, partitionCol),
-      images.schema, partitionCol)
-    enforceConstraints(spark, root, m, fresh, Some(images.schema.json))
-    val updated = m.files.map { f =>
-      counts.get(f.path) match {
-        case Some(n) => f.copy(dvs = f.dvs :+ DvRef(dvRel, n))
-        case None => f
+      partitionCol: Option[String] = None): Long =
+    mutation(spark, dir, "DML") { b =>
+      if (b.m.files.isEmpty) b.m.version // nothing to match on an emptied table
+      else {
+        requirePartitionCol(b, dir, partitionCol)
+        // ONE predicate scan over the visible rows, materialized because
+        // it feeds BOTH the sidecar and the image write (O(matches) —
+        // the frame a MoR update exists to keep small)
+        tombstone(spark, b, readFiles(spark, b.root, b.m.files, b.m.schemas,
+            withRowId = true).where(coalesce(pred, lit(false))), reuse = true) {
+          case (_, None) => b.m.version
+          // new images: RHS staged against the OLD row (no gate — every
+          // row here matched), reserved row-id columns dropped
+          case (matched, tombstoned) => publishOr(b, stageDv(spark, b, tombstoned,
+            Some(assign(matched.drop(DvFileCol, DvPosCol), assignments, None)),
+            partitionCol, "update-dv"))
+        }
       }
     }
-    // newSchema stays None: the delta's adds include DV-ref-modified
-    // entries from OLDER commit dirs, and a header-level schema would
-    // be replayed onto ALL add dirs — the fresh dir's schema rides
-    // the per-dir map instead
-    commit(store, root, m, updated ++ fresh, newSchema = None,
-      op = "update-dv", full = false,
-      extraSchemas = Map(dirOf(fresh.head.path) -> images.schema.json))
-  }
 
   /** MERGE INTO as MERGE-ON-READ, completing the DV DML family
     * (delete → update → merge): matched rows selected for DELETE or
@@ -2889,123 +2842,51 @@ object TxTable {
       whenMatchedUpdate: Seq[(String, org.apache.spark.sql.Column)] = Seq.empty,
       whenMatchedUpdateCond: Option[org.apache.spark.sql.Column] = None,
       whenNotMatchedInsert: Option[org.apache.spark.sql.Column] = None,
-      txn: Option[(String, Long)] = None): Long = {
-    val (fs, root) = fsOf(spark, dir)
-    val store = logStoreFactory(fs)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"mergeIntoDv needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
-    if (txn.exists { case (app, ver) => m.txns.get(app).exists(_ >= ver) })
-      return base
-    // bounded driver collect: ≤ #partition values by definition
-    val touched = source.select(col(partitionCol)).distinct()
-      .collect().map(r => String.valueOf(r.get(0))).toSet
-    requirePathSafe(touched, partitionCol)
-    val touchedFiles = m.files.filter(_.bucket.exists(touched))
-    // DV-aware slice of ONLY the partitions the source names — the
-    // join is pruned to the data that can possibly match
-    val slice = sliceOrEmpty(spark, root, touchedFiles, m.files, m.schemas,
-      withRowId = true)
-    val tFields = slice.schema.fields
-      .filterNot(f => f.name == DvFileCol || f.name == DvPosCol)
-    val tagged = slice.select(
-      struct(tFields.map(f => col(f.name)).toIndexedSeq: _*).as("t"),
-      col(DvFileCol), col(DvPosCol))
-    val joined = tagged.join(
-      source.select(struct(source.columns.map(col).toIndexedSeq: _*).as("s")),
-      col("t").getField(keyCol) === col("s").getField(keyCol), "inner")
-    val deleteCond = coalesce(
-      whenMatchedDelete.getOrElse(lit(false)), lit(false))
-    val updateCond = coalesce(
-      if (whenMatchedUpdate.isEmpty) lit(false)
-      else whenMatchedUpdateCond.getOrElse(lit(true)), lit(false))
-    val insertCond = coalesce(
-      whenNotMatchedInsert.getOrElse(lit(false)), lit(false))
-    // one materialization of the O(changes) frame: it feeds the
-    // sidecar, the cardinality check, and the image write
-    val changed = joined.where(deleteCond || updateCond).localCheckpoint()
-    // cardinality check BEFORE the sidecar packs: duplicate (file, pos)
-    // claims mean two source rows changing one target row — abort with
-    // the table untouched (nothing has been written yet)
-    if (changed.groupBy(col(DvFileCol), col(DvPosCol))
-        .agg(count(lit(1)).as("c")).where(col("c") > 1)
-        .limit(1).collect().nonEmpty)
-      sys.error("MERGE cardinality violation: multiple source rows " +
-        s"match the same target row on '$keyCol' with a delete/update " +
-        "clause firing — deduplicate the source on the merge key")
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val dvRel = s"dv/v${base + 1}-$token"
-    val dvPath = new Path(root, dvRel)
-    val counts = writeDvSidecar(spark, root, dvRel, changed)
-    // new images for the update clause: every RHS sees the OLD t row
-    val assign = whenMatchedUpdate.toMap
-    val images = changed.where(!deleteCond && updateCond)
-      .select(tFields.map(f =>
-        assign.getOrElse(f.name, col("t").getField(f.name))
-          .cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-    // not-matched inserts: anti-join on the key against the pruned
-    // slice (a key living in a partition the source does not name
-    // cannot match — same contract as mergeInto)
-    val srcCols = source.columns.toSet
-    val inserts = source
-      .select(struct(source.columns.map(col).toIndexedSeq: _*).as("s"))
-      .join(tagged.select(col("t").getField(keyCol).as("__graft_mk")),
-        col("s").getField(keyCol) === col("__graft_mk"), "left_anti")
-      .where(insertCond)
-      .select(tFields.map { f =>
-        (if (srcCols.contains(f.name)) col("s").getField(f.name)
-         else lit(null)).cast(f.dataType).as(f.name)
-      }.toIndexedSeq: _*)
-    val freshRows = images.unionByName(inserts)
-    val commitDir = newCommitDir(root, base + 1)
-    freshRows.write.mode("errorifexists").partitionBy(partitionCol)
-      .parquet(commitDir.toString)
-    val fresh = propagateSkipping(spark, root, m,
-      listCommitFiles(fs, root, commitDir, Some(partitionCol)),
-      freshRows.schema, Some(partitionCol))
-    if (counts.isEmpty && fresh.isEmpty) {
-      fs.delete(dvPath, true); fs.delete(commitDir, true); return base
-    }
-    if (counts.isEmpty) fs.delete(dvPath, true)
-    enforceConstraints(spark, root, m, fresh, Some(freshRows.schema.json))
-    val updated = m.files.map { f =>
-      counts.get(f.path) match {
-        case Some(n) => f.copy(dvs = f.dvs :+ DvRef(dvRel, n))
-        case None => f
+      txn: Option[(String, Long)] = None): Long =
+    mutation(spark, dir, "mergeIntoDv", txn) { b =>
+      withMaterializedChanges(source, partitionCol) { (src, touched) =>
+        // DV-aware slice of ONLY the partitions the source names — the
+        // join is pruned to the data that can possibly match
+        val slice = touchedSlice(spark, b, touched, partitionCol, withRowId = true)._1
+        val target = slice.schema.fields.toSeq
+          .filterNot(f => f.name == DvFileCol || f.name == DvPosCol)
+        val c = mergeClauses(target, src, whenMatchedDelete, whenMatchedUpdate,
+          whenMatchedUpdateCond, whenNotMatchedInsert)
+        val tagged = slice.select(struct(target.map(f => col(f.name)): _*).as("t"),
+          col(DvFileCol), col(DvPosCol))
+        val joined = tagged.join(c.source,
+          col("t").getField(keyCol) === col("s").getField(keyCol), "inner")
+        // the O(changes) frame feeds the sidecar, the cardinality check
+        // and the image write; the check runs BEFORE the sidecar packs:
+        // duplicate (file, pos) claims mean two source rows changing one
+        // target row — abort with the table untouched
+        tombstone(spark, b, joined.where(c.delete || c.update), reuse = true,
+          validate = changed =>
+            if (changed.groupBy(col(DvFileCol), col(DvPosCol))
+                .agg(count(lit(1)).as("c")).where(col("c") > 1)
+                .limit(1).collect().nonEmpty)
+              sys.error("MERGE cardinality violation: multiple source rows " +
+                s"match the same target row on '$keyCol' with a delete/update " +
+                "clause firing — deduplicate the source on the merge key")) {
+          (changed, tombstoned) =>
+            def named(cs: Seq[org.apache.spark.sql.Column]) =
+              cs.zip(target).map { case (e, f) => e.as(f.name) }
+            // new images for the update clause: every RHS sees the OLD t row
+            val images = changed.where(!c.delete && c.update).select(named(c.updated): _*)
+            // not-matched inserts: anti-join on the key against the pruned
+            // slice (a key living in a partition the source does not name
+            // cannot match — same contract as mergeInto)
+            val inserts = c.source
+              .join(tagged.select(col("t").getField(keyCol).as("__graft_mk")),
+                col("s").getField(keyCol) === col("__graft_mk"), "left_anti")
+              .where(c.insert)
+              .select(named(c.inserted): _*)
+            publishOr(b, stageDv(spark, b, tombstoned,
+              Some(images.unionByName(inserts)), Some(partitionCol), "merge-dv", txn))
+        }
       }
     }
-    // newSchema stays None for the same reason as updateWhereDv: the
-    // delta's adds include DV-ref-modified entries from OLDER commit
-    // dirs; the fresh dir's schema rides the per-dir map
-    commit(store, root, m, updated ++ fresh, newSchema = None,
-      op = "merge-dv", full = false,
-      extraSchemas = fresh.headOption
-        .map(f => dirOf(f.path) -> freshRows.schema.json).toMap,
-      txn = txn)
-  }
 
-  /** Reclaim files referenced by NO retained manifest and, when
-    * `keepVersions` is set, retire manifests older than the newest
-    * `keepVersions` first (time travel shrinks accordingly). Before
-    * any manifest is dropped, the retention horizon gets a CHECKPOINT
-    * (if the cadence hasn't already written one) so the oldest
-    * retained version stays reconstructible without the dropped delta
-    * tail — the log-cleanup discipline incremental manifests require.
-    * Checkpoints older than the horizon are retired with their
-    * manifests. Returns the number of data files deleted.
-    *
-    * Retention guard: an IN-FLIGHT commit's data files are also
-    * "referenced by no manifest" until its publish — deleting them
-    * would corrupt the version it is about to publish. Files modified
-    * within `retentionMs` of now are therefore spared (the Delta
-    * VACUUM retention discipline; default 7 days). Pass 0 only when
-    * no writer can be active (tests, decommission). The wall-clock
-    * here is the vacuum RUNNER's — writers on skewed clocks are
-    * covered only up to the skew, so keep `retentionMs` comfortably
-    * above any plausible clock drift + commit duration (the same
-    * exposure Delta's VACUUM documents). Unreferenced files OLDER
-    * than the window truly can never become referenced — publication
-    * always targets freshly written dirs. */
   /** [[vacuum]] with WALL-CLOCK version retention (the SQL `VACUUM …
     * RETAIN n HOURS` / log-retention-duration face): keep every
     * version committed within the last `keepMs`, PLUS the newest
@@ -3031,6 +2912,28 @@ object TxTable {
     }
   }
 
+  /** Reclaim files referenced by NO retained manifest and, when
+    * `keepVersions` is set, retire manifests older than the newest
+    * `keepVersions` first (time travel shrinks accordingly). Before
+    * any manifest is dropped, the retention horizon gets a CHECKPOINT
+    * (if the cadence hasn't already written one) so the oldest
+    * retained version stays reconstructible without the dropped delta
+    * tail — the log-cleanup discipline incremental manifests require.
+    * Checkpoints older than the horizon are retired with their
+    * manifests. Returns the number of data files deleted.
+    *
+    * Retention guard: an IN-FLIGHT commit's data files are also
+    * "referenced by no manifest" until its publish — deleting them
+    * would corrupt the version it is about to publish. Files modified
+    * within `retentionMs` of now are therefore spared (the Delta
+    * VACUUM retention discipline; default 7 days). Pass 0 only when
+    * no writer can be active (tests, decommission). The wall-clock
+    * here is the vacuum RUNNER's — writers on skewed clocks are
+    * covered only up to the skew, so keep `retentionMs` comfortably
+    * above any plausible clock drift + commit duration (the same
+    * exposure Delta's VACUUM documents). Unreferenced files OLDER
+    * than the window truly can never become referenced — publication
+    * always targets freshly written dirs. */
   def vacuum(
       spark: SparkSession, dir: String,
       keepVersions: Option[Int] = None,

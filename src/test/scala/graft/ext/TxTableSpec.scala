@@ -441,8 +441,9 @@ abstract class TxTableBehaviors extends SparkSpec {
       val ts = Seq(left, right).map { cs =>
         new Thread(() => {
           start.await()
-          try TxTable.mergeChangeSetWithRetry(
-            spark, dir, cs, "event_id", "op", "pbucket", maxRetries = 10)
+          try TxTable.withConflictRetry(maxRetries = 10) {
+            TxTable.mergeChangeSet(spark, dir, cs, "event_id", "op", "pbucket")
+          }
           catch { case t: Throwable => errs.add(t) }
         })
       }
@@ -1128,10 +1129,12 @@ abstract class TxTableBehaviors extends SparkSpec {
           new Thread(() => {
             start.await()
             try (1 to 3).foreach { i =>
-              TxTable.mergeChangeSetWithRetry(spark, dir,
-                Seq((1000L * t + i, "insert", t * 1.0, ((t + i) % 4).toLong))
-                  .toDF("event_id", "op", "value", "pbucket"),
-                "event_id", "op", "pbucket", maxRetries = 50)
+              TxTable.withConflictRetry(maxRetries = 50) {
+                TxTable.mergeChangeSet(spark, dir,
+                  Seq((1000L * t + i, "insert", t * 1.0, ((t + i) % 4).toLong))
+                    .toDF("event_id", "op", "value", "pbucket"),
+                  "event_id", "op", "pbucket")
+              }
             } catch { case e: Throwable => errs.add(e) }
           })
         }
@@ -2138,6 +2141,59 @@ abstract class TxTableBehaviors extends SparkSpec {
       }
       assert(e.getMessage.contains("cardinality"), e.getMessage)
       assert(TxTable.latestVersion(spark, dir) === Some(2L))
+    }
+  }
+
+  test("updateWhereDv and mergeIntoDv release every block they materialize") {
+    inDir { dir =>
+      import spark.implicits._
+      TxTable.commitReplace(spark, dir, snap(12), Some("pbucket"))
+      def pinned = spark.sparkContext.getPersistentRDDs.keySet
+      val before = pinned
+      TxTable.updateWhereDv(spark, dir, col("event_id") < 3L,
+        Seq("value" -> (col("value") + 1.0)), Some("pbucket"))
+      assert((pinned -- before).isEmpty, "updateWhereDv left blocks pinned")
+      TxTable.mergeIntoDv(spark, dir,
+        Seq((4L, 1.0, 0L), (300L, 2.0, 0L)).toDF("event_id", "value", "pbucket"),
+        "event_id", "pbucket",
+        whenMatchedUpdate = Seq("value" -> col("s.value")),
+        whenNotMatchedInsert = Some(lit(true)))
+      assert((pinned -- before).isEmpty, "mergeIntoDv left blocks pinned")
+      // a merge aborted by the cardinality check releases its blocks too
+      intercept[RuntimeException] {
+        TxTable.mergeIntoDv(spark, dir,
+          Seq((2L, 1.0, 2L), (2L, 5.0, 2L)).toDF("event_id", "value", "pbucket"),
+          "event_id", "pbucket", whenMatchedUpdate = Seq("value" -> col("s.value")))
+      }
+      assert((pinned -- before).isEmpty, "an aborted mergeIntoDv left blocks pinned")
+    }
+  }
+
+  test("mergeInto and mergeIntoDv evaluate their source exactly once") {
+    Seq(false, true).foreach { dv =>
+      inDir { dir =>
+        import spark.implicits._
+        TxTable.commitReplace(spark, dir, snap(12), Some("pbucket"))
+        val acc = spark.sparkContext.longAccumulator(s"merge-source-evals-$dv")
+        val bump = udf((v: Long) => { acc.add(1L); v }).asNondeterministic()
+        val source = Seq((1L, 5.0, 1L), (2L, -6.0, 2L), (500L, 7.0, 0L))
+          .toDF("event_id", "value", "pbucket")
+          .withColumn("event_id", bump(col("event_id")))
+        val del = Some(col("s.value") < 0.0)
+        val upd = Seq("value" -> col("s.value"))
+        val ins = Some(lit(true))
+        if (dv) TxTable.mergeIntoDv(spark, dir, source, "event_id", "pbucket",
+          whenMatchedDelete = del, whenMatchedUpdate = upd, whenNotMatchedInsert = ins)
+        else TxTable.mergeInto(spark, dir, source, "event_id", "pbucket",
+          whenMatchedDelete = del, whenMatchedUpdate = upd, whenNotMatchedInsert = ins)
+        assert(acc.value === 3L,
+          s"dv=$dv: the source must evaluate once (saw ${acc.value} row evals)")
+        val expected = rows(snap(12)).collect {
+          case (1L, _, b) => (1L, 5.0, b)
+          case r if r._1 != 2L => r
+        } + ((500L, 7.0, 0L))
+        assert(rows(TxTable.read(spark, dir)) === expected)
+      }
     }
   }
 
