@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
-import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Deletion-vector bitmap codec: the tombstones of ONE data file,
@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *     for scattered point deletes across a wide file.
   *
   * Both probes are O(1)/O(log n) per row with zero allocation, called
-  * statically from [[DvContains]]'s generated code so the scan
+  * statically from [[DvMapContains]]' generated code so the scan
   * filter stays inside whole-stage codegen. Positions are parquet
   * `row_index` values: non-negative, unique per file. */
 object DvBitmap {
@@ -116,8 +116,7 @@ object DvBitmap {
     case t => sys.error(s"unknown deletion-vector container tag $t")
   }
 
-  /** Decode back to sorted positions (specs, CDC debugging, and the
-    * legacy-sidecar round-trip test). */
+  /** Decode back to sorted positions (specs, CDC debugging). */
   def positions(b: Array[Byte]): Array[Long] = b(0) match {
     case 0 =>
       val baseByte = readLongLE(b, 1)
@@ -140,49 +139,15 @@ object DvBitmap {
   }
 }
 
-/** `dv_contains(bitmap, pos)`: membership probe against ONE packed
-  * container — the scan-time DV filter since the read side OR-merges
-  * the per-commit stack into a single bitmap per file ([[DvUnion]]):
-  * one O(1)/O(log n) probe per row inside whole-stage codegen,
-  * regardless of how many DML commits tombstoned the file. */
-case class DvContains(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "dv_contains"
-  override def inputTypes = Seq(BinaryType, LongType)
-
-  override def nullSafeEval(bitmap: Any, pos: Any): Any =
-    DvBitmap.contains(bitmap.asInstanceOf[Array[Byte]], pos.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, p) => s"graft.ext.DvBitmap.contains($b, $p)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DvContains =
-    copy(left = newLeft, right = newRight)
-}
-
-object DvContains {
-  def apply(bitmap: Column, pos: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(DvContains(
-      org.apache.spark.sql.GraftColumnBridge.expression(bitmap),
-      org.apache.spark.sql.GraftColumnBridge.expression(pos)))
-}
-
-/** `dv_map_contains(file, pos)`: the broadcast-path DV probe (r20).
+/** `dv_map_contains(file, pos)`: the deletion-vector scan filter.
   *
-  * The former shape joined the per-file bitmap side onto every data
-  * row and probed `dv_contains(bits, pos)` — but a BINARY column read
-  * out of a joined row COPIES the whole byte array per row
-  * (`UnsafeRow.getBinary`), so a 375 KB dense container over a 3 M-row
-  * file cost ~1 TB of memcpy in ONE task (the r19 "test suite stall"
-  * was this copy loop, not a deadlock — a single task burning 200+ s
-  * of CPU inside `hashAgg_doAggregateWithoutKey`). Probing a
-  * driver-collected, BROADCAST per-file map instead touches the row's
-  * file-path string (a zero-copy UTF8String view) and the shared
-  * bitmap bytes: no join node, no per-row copy, one broadcast of
-  * exactly the bytes the join's broadcast side shipped anyway. The
-  * non-broadcast mass-delete fallback keeps the join shape.
+  * Probes a driver-folded, BROADCAST map of one container per file
+  * (`TxTable.dvMap`) with the row's file-path string (a zero-copy
+  * UTF8String view) and position: no join node and no per-row copy of
+  * the bitmap bytes, so the cost is linear in rows at any bitmap size.
+  * (A joined BINARY column is copied out of every row by
+  * `UnsafeRow.getBinary`: a 375 KB dense container over a 3 M-row
+  * file cost ~1 TB of memcpy in one task.)
   *
   * The broadcast handle rides the expression (tiny, serializable);
   * the generated code pulls `.value()` per row — a cached-field read

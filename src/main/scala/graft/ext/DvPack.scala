@@ -386,74 +386,3 @@ object DvPack {
       DvPack(org.apache.spark.sql.GraftColumnBridge.expression(pos))
         .toAggregateExpression())
 }
-
-/** `dv_union(bits)`: OR-merge already-PACKED deletion-vector
-  * containers into ONE container — the read-side collapse of the
-  * per-commit bitmap stack (r15 VERDICT: `collect_list(bits)` was the
-  * last list-gather in the hot read path, and a compaction-starved
-  * table hit by N DML waves made every row probe N containers).
-  * Same [[DvAcc]] state machine as [[DvPack]], fed containers instead
-  * of positions: a dense partial is ADOPTED by reference-copy, never
-  * replayed position by position, so merging N stacked bitmaps of one
-  * file costs O(file-span/8 + sparse positions) — independent of row
-  * count, bounded by the single container a compact would write.
-  * Input containers are immutable commit artifacts; the output is
-  * byte-identical to [[DvBitmap.pack]] of the united position set
-  * (the [[DvAcc.packed]] re-decision), so downstream probes and size
-  * decisions see exactly compact's bytes. NULL inputs are ignored; a
-  * group with no container evaluates to NULL.
-  *
-  * The position-multiset contract is weaker than [[DvPack]]'s:
-  * stacked refs MAY overlap only through concurrent-repair replays
-  * (normal DML tombstones each visible row once) — the dense OR is
-  * idempotent and the sparse path tolerates duplicates, so an overlap
-  * can never corrupt membership, only the pre-pack size estimate. */
-case class DvUnion(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[DvAcc]
-  with ImplicitCastInputTypes with UnaryLike[Expression] {
-
-  override def prettyName: String = "dv_union"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def inputTypes = Seq(BinaryType)
-
-  override def createAggregationBuffer(): DvAcc = new DvAcc
-
-  override def update(buffer: DvAcc, input: InternalRow): DvAcc = {
-    val v = child.eval(input)
-    if (v != null) buffer.mergeFrom(DvAcc.from(v.asInstanceOf[Array[Byte]]))
-    buffer
-  }
-
-  override def merge(buffer: DvAcc, other: DvAcc): DvAcc = {
-    buffer.mergeFrom(other)
-    buffer
-  }
-
-  override def eval(buffer: DvAcc): Any =
-    if (buffer.isEmpty) null else buffer.packed()
-
-  override def serialize(buffer: DvAcc): Array[Byte] =
-    if (buffer.isEmpty) Array.emptyByteArray else buffer.packed()
-
-  override def deserialize(storageFormat: Array[Byte]): DvAcc =
-    DvAcc.from(storageFormat)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): DvUnion =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): DvUnion =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): DvUnion =
-    copy(child = newChild)
-}
-
-object DvUnion {
-  /** Column builder: `DvUnion.agg(col("bits"))`. */
-  def agg(bits: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      DvUnion(org.apache.spark.sql.GraftColumnBridge.expression(bits))
-        .toAggregateExpression())
-}

@@ -1733,7 +1733,6 @@ object TxTable {
     * construction. */
   private[graft] val DvFileCol = "__graft_dv_file"
   private[graft] val DvPosCol = "__graft_dv_pos"
-  private[graft] val DvBitsCol = "__graft_dv_bits"
 
   /** Write `doomed`'s ([[DvFileCol]], [[DvPosCol]]) row identities as a
     * deletion-vector sidecar at `root/dvRel` — ONE row per tombstoned
@@ -1813,56 +1812,59 @@ object TxTable {
     }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** True when a DV sidecar dir holds the bitmap form (a `bits`
-    * column in the parquet schema), decided by ONE driver-side footer
-    * read of the dir's first data file — no spark job. Any failure to
-    * decide (empty dir, unreadable footer) returns false, which routes
-    * the caller to the inferring legacy read — correct either way,
-    * just without the saved job. */
-  private def sidecarIsBitmapForm(fs: FileSystem, dir: Path): Boolean =
-    try {
-      fs.listStatus(dir).collectFirst {
-        case st if st.isFile && st.getLen > 0 &&
-            st.getPath.getName.startsWith("part-") =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(st, fs.getConf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getFileMetaData.getSchema.containsField("bits")
-          finally r.close()
-      }.getOrElse(false)
-    } catch { case scala.util.control.NonFatal(_) => false }
+  /** The deletion vectors of `dved` as ONE container per file, keyed
+    * by its root-relative path: the map [[readFiles]] broadcasts. Every
+    * referenced sidecar dir reads under the declared bitmap schema, all
+    * in ONE collect job (a union of per-dir reads: a single read of more
+    * than `spark.sql.sources.parallelPartitionDiscovery.threshold` dirs
+    * would list them with a job of its own), and each file's stacked
+    * containers OR-fold on the driver ([[DvAcc]]: a dense container is
+    * adopted, never replayed position by position). A table hit by N DML
+    * waves thus still probes one container per row, byte-identical to
+    * the one a compact would write. A referenced (file, dir) pair with
+    * no bitmap (a pre-bitmap row-form or foreign sidecar) fails the
+    * read: taken as "nothing tombstoned" it would bring deleted rows
+    * back. */
+  private[graft] def dvMap(
+      spark: SparkSession, root: Path,
+      dved: Seq[FileEntry]): Map[UTF8String, Array[Byte]] = {
+    val stacks = dved.flatMap(_.dvs.map(_.dir)).distinct.map { d =>
+      spark.read.schema("file STRING, bits BINARY")
+        .parquet(new Path(root, d).toString)
+        .select(col("file"), col("bits"), lit(d))
+    }.reduce(_.union(_)).collect().toSeq
+      .groupMap(r => (r.getString(0), r.getString(2)))(
+        r => Option(r.getAs[Array[Byte]](1)))
+    dved.map { f =>
+      val acc = new DvAcc
+      f.dvs.foreach { ref =>
+        val bits = stacks.getOrElse((f.path, ref.dir), Seq.empty)
+        require(bits.nonEmpty && bits.forall(_.isDefined),
+          s"deletion-vector sidecar ${ref.dir} holds no bitmap for " +
+            s"${f.path}: only the (file, bits) bitmap form can be read")
+        bits.foreach(b => acc.mergeFrom(DvAcc.from(b.get)))
+      }
+      UTF8String.fromString(f.path) -> acc.packed()
+    }.toMap
+  }
 
-  /** Read entries as one DataFrame. Files are grouped by their commit
-    * directory so each group reads with its own `basePath` (restoring
-    * the partition column the `col=value` layout encodes); the union
-    * is bounded by the number of commits still contributing files.
-    * Groups whose dir has a log-carried schema read WITHOUT opening a
-    * single parquet footer (the declared schema covers data + the
-    * partition column, which Spark fills from the dir value at the
-    * declared type); unknown dirs fall back to inference.
+  /** Read entries as one DataFrame, applying any deletion vectors.
+    * Files are grouped by their commit directory so each group reads
+    * with its own `basePath` (restoring the partition column the
+    * `col=value` layout encodes); the union is bounded by the number of
+    * commits still contributing files. Groups whose dir has a
+    * log-carried schema read WITHOUT opening a single parquet footer
+    * (the declared schema covers data + the partition column, which
+    * Spark fills from the dir value at the declared type); unknown dirs
+    * fall back to inference.
     *
-    * Read entries as one DataFrame, applying any deletion vectors.
-    * Entries WITHOUT DVs read exactly as before (zero join, zero
-    * metadata projection — the common case pays nothing); entries
-    * WITH DVs read with (file, pos) row identity, join the per-FILE
-    * bitmap side on the path alone, and drop rows whose position the
-    * file's bitmap tombstones ([[DvContains]] — a static O(1) probe
-    * inside whole-stage codegen). The per-commit bitmap STACK is
-    * OR-merged at read into ONE container per file ([[DvUnion]] —
-    * dense partials adopted by reference, never replayed), so a
-    * compaction-starved table hit by N DML waves still carries one
-    * bitmap per file and the scan probes ONE container per row —
-    * exactly the bytes a compact would have reconciled, paid once per
-    * query instead of N times per row. The bitmap side holds ONE row
-    * per tombstoned file, so it is broadcast-sized by construction
-    * for point DML; the decision still keys on the sidecars' ACTUAL
-    * on-disk bytes with a mass-delete shuffle fallback (the merged
-    * side is never LARGER than the stacked sidecar bytes: OR can only
-    * collapse). Pre-bitmap sidecars (one (file, pos) row per
-    * tombstone) are packed into the same shape at read time, so
-    * tables written before the bitmap format upgrade keep reading.
-    * `withRowId` additionally exposes [[DvFileCol]]/[[DvPosCol]] to
-    * DML writers. */
+    * Entries WITHOUT DVs read with no metadata projection (the common
+    * case pays nothing). Entries WITH DVs read
+    * with (file, pos) row identity and drop every row whose position
+    * its file's container tombstones: [[dvMap]] folds the containers on
+    * the driver, and the scan filter probes the broadcast map
+    * ([[DvMapContains]], no join, no per-row copy). `withRowId`
+    * additionally exposes [[DvFileCol]]/[[DvPosCol]] to DML writers. */
   private def readFiles(
       spark: SparkSession, root: Path, files: Seq[FileEntry],
       schemas: Map[String, String] = Map.empty,
@@ -1874,58 +1876,10 @@ object TxTable {
       Option.when(plain.nonEmpty)(
         rawRead(spark, root, plain, schemas, withRowId)),
       Option.when(dved.nonEmpty) {
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val dvDirs = dved.flatMap(_.dvs.map(_.dir)).distinct
-        val perDir = dvDirs.map { d =>
-          val p = new Path(root, d)
-          // form detection via ONE driver-side footer read instead of a
-          // schema-inference spark JOB per sidecar dir per read-build:
-          // DV dirs stack one per DML commit until a compact, so an
-          // interactive read of a busy table paid one job per commit
-          // just to learn a schema this engine wrote. The bitmap form
-          // (the only form this engine writes) then reads under its
-          // declared subset schema; legacy row-form sidecars — and any
-          // dir the probe cannot read — keep the inferring read.
-          if (sidecarIsBitmapForm(fs, p))
-            spark.read.schema("file STRING, bits BINARY")
-              .parquet(p.toString).select("file", "bits")
-          else {
-            val raw = spark.read.parquet(p.toString)
-            if (raw.columns.contains("bits")) raw.select("file", "bits")
-            else raw.groupBy("file") // legacy row-form sidecar: pack now
-              .agg(DvPack.agg(col("pos")).as("bits"))
-          }
-        }
-        val dv = perDir.reduce(_.unionByName(_))
-          .groupBy(col("file").as(DvFileCol))
-          .agg(DvUnion.agg(col("bits")).as(DvBitsCol))
-        // broadcast decision on the sidecars' ACTUAL bytes (driver-side
-        // FS stat, one RPC per DML commit since the last compact), with
-        // headroom for parquet-decode expansion of the bitmap payloads
-        val dvBytes = dvDirs.map(d =>
-          fs.getContentSummary(new Path(root, d)).getLength).sum
-        val filtered = if (dvBytes * 8 <= (32L << 20)) {
-          // broadcast path (r20): collect the per-file merged bitmaps —
-          // the very rows the former broadcast-join side shipped — and
-          // probe them as a broadcast map inside the scan filter. The
-          // join formulation read the BINARY bits column out of every
-          // joined row, and UnsafeRow.getBinary copies the whole
-          // container per row: a dense bitmap over an N-row file cost
-          // O(N · span/8) bytes of memcpy in the scan (the r19 suite
-          // "stall"). Map probe: zero copies, no join node, and the
-          // sidecar union job runs once at read-build time.
-          val dvMap = dv.collect()
-            .map(r => UTF8String.fromString(r.getString(0)) ->
-              r.getAs[Array[Byte]](1)).toMap
-          val bcast = spark.sparkContext.broadcast(dvMap)
-          rawRead(spark, root, dved, schemas, withRowId = true)
-            .where(!DvMapContains(col(DvFileCol), col(DvPosCol),
-              bcast, dvMap.size))
-        } else rawRead(spark, root, dved, schemas, withRowId = true)
-          .join(dv, Seq(DvFileCol), "left")
-          .where(col(DvBitsCol).isNull ||
-            !DvContains(col(DvBitsCol), col(DvPosCol)))
-          .drop(DvBitsCol)
+        val dvs = dvMap(spark, root, dved)
+        val filtered = rawRead(spark, root, dved, schemas, withRowId = true)
+          .where(!DvMapContains(col(DvFileCol), col(DvPosCol),
+            spark.sparkContext.broadcast(dvs), dvs.size))
         if (withRowId) filtered else filtered.drop(DvFileCol, DvPosCol)
       }).flatten
     parts.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -1943,9 +1897,14 @@ object TxTable {
       all: Seq[FileEntry], schemas: Map[String, String],
       withRowId: Boolean = false): DataFrame =
     if (hit.nonEmpty) readFiles(spark, root, hit, schemas, withRowId)
-    else if (all.nonEmpty)
-      readFiles(spark, root, all, schemas, withRowId).limit(0)
-    else {
+    else if (all.nonEmpty) {
+      // readFiles(all)'s columns in its order (plain part, then DV
+      // part), but zero rows need no tombstones: no sidecar is opened
+      val (dved, plain) = all.partition(_.dvs.nonEmpty)
+      Seq(plain, dved).filter(_.nonEmpty)
+        .map(rawRead(spark, root, _, schemas, withRowId))
+        .reduce(_.unionByName(_, allowMissingColumns = true)).limit(0)
+    } else {
       def seqOf(d: String): Long =
         "v(\\d+)-".r.findFirstMatchIn(d).map(_.group(1).toLong).getOrElse(0L)
       val schemaJson = schemas.toSeq.sortBy { case (d, _) => seqOf(d) }

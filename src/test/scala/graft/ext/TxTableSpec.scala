@@ -1671,11 +1671,11 @@ abstract class TxTableBehaviors extends SparkSpec {
         TxTable.latestVersion(spark, dir).get)
       assert(m.files.map(_.dvs.size).max >= 10,
         "the scenario must genuinely stack refs (no silent compaction)")
-      // READ-SIDE PAYLOAD BOUND: OR-merging a file's whole stack
-      // (exactly what readFiles' DvUnion does) yields bytes IDENTICAL
-      // to the ONE container compact would write for its tombstone
-      // set — per-file DV payload is bounded by the united position
-      // set, independent of how many DML commits produced it
+      // READ-SIDE PAYLOAD BOUND: OR-folding a file's whole stack
+      // (exactly what readFiles' driver fold does) yields bytes
+      // IDENTICAL to the ONE container compact would write for its
+      // tombstone set — per-file DV payload is bounded by the united
+      // position set, independent of how many DML commits produced it
       val dvDirs = m.files.flatMap(_.dvs.map(_.dir)).distinct
       val sidecars = dvDirs.map(d => spark.read.parquet(s"$dir/$d"))
         .reduce(_.unionByName(_))
@@ -1684,9 +1684,8 @@ abstract class TxTableBehaviors extends SparkSpec {
         .groupBy(_._1)
         .view.mapValues(_.flatMap(e => DvBitmap.positions(e._2))
           .distinct.sorted).toMap
-      val merged = sidecars.groupBy("file")
-        .agg(DvUnion.agg(col("bits")).as("bits")).collect()
-        .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
+      val merged = TxTable.dvMap(spark, new org.apache.hadoop.fs.Path(dir),
+        m.files.filter(_.dvs.nonEmpty)).map { case (f, b) => f.toString -> b }
       assert(merged.keySet === posByFile.keySet)
       merged.foreach { case (f, bytes) =>
         assert(java.util.Arrays.equals(bytes, DvBitmap.pack(posByFile(f))),
@@ -1893,15 +1892,13 @@ abstract class TxTableBehaviors extends SparkSpec {
     }
   }
 
-  test("pre-bitmap (row-form) DV sidecars keep reading; bitmap DVs stack on top") {
+  test("a row-form DV sidecar fails the read, naming the file and its dir") {
     inDir { dir =>
       TxTable.commitReplace(spark, dir, snap(30), Some("pbucket"))
       TxTable.deleteWhereDv(spark, dir, col("event_id") % 3 === 0)
-      val expect1 = snap(30).where(!(col("event_id") % 3 === 0))
       // rewrite the just-written sidecar into the PRE-BITMAP row form
-      // (one (file, pos) row per tombstone) — the exact layout the
-      // engine published before the bitmap-container upgrade, so a
-      // table carrying old sidecars must keep reading unchanged
+      // (one (file, pos) row per tombstone, no `bits` column): read as
+      // "nothing tombstoned" it would resurrect every deleted row
       val m = TxTable.readManifest(spark, dir,
         TxTable.latestVersion(spark, dir).get)
       val dvDirs = m.files.flatMap(_.dvs.map(_.dir)).distinct
@@ -1920,18 +1917,39 @@ abstract class TxTableBehaviors extends SparkSpec {
           .forEach(q => java.nio.file.Files.delete(q))
       rmTree(dvPath)
       java.nio.file.Files.move(tmpOut, dvPath)
-      // the legacy sidecar still subtracts its tombstones
-      assert(rows(TxTable.read(spark, dir)) === rows(expect1))
-      assert(TxTable.metaCount(spark, dir) === expect1.count())
-      // a NEW bitmap DV stacks on the legacy one (the predicate scan
-      // itself reads THROUGH the row-form sidecar)
-      TxTable.deleteWhereDv(spark, dir, col("event_id") % 2 === 1)
-      val expect2 = expect1.where(!(col("event_id") % 2 === 1))
-      assert(rows(TxTable.read(spark, dir)) === rows(expect2))
-      assert(TxTable.metaCount(spark, dir) === expect2.count())
-      // compact reconciles the MIXED stack physically
-      TxTable.compact(spark, dir, "pbucket")
-      assert(rows(TxTable.read(spark, dir)) === rows(expect2))
+      val tombstoned = m.files.filter(_.dvs.nonEmpty).map(_.path)
+      assert(tombstoned.nonEmpty)
+      val e = intercept[IllegalArgumentException](TxTable.read(spark, dir))
+      assert(e.getMessage.contains(dvDirs.head), e.getMessage)
+      assert(tombstoned.exists(e.getMessage.contains), e.getMessage)
+      // a DML whose predicate scan reads through the sidecar fails the
+      // same way, before it publishes anything
+      val v = TxTable.latestVersion(spark, dir)
+      intercept[IllegalArgumentException](
+        TxTable.deleteWhereDv(spark, dir, col("event_id") % 2 === 1))
+      assert(TxTable.latestVersion(spark, dir) === v)
+    }
+  }
+
+  test("an empty slice opens no DV sidecar and keeps the table's schema") {
+    inDir { dir =>
+      TxTable.commitReplace(spark, dir, snap(40), Some("pbucket"),
+        statsCols = Seq("event_id"))
+      TxTable.deleteWhereDv(spark, dir, col("event_id") % 3 === 0)
+      val m = TxTable.readManifest(spark, dir,
+        TxTable.latestVersion(spark, dir).get)
+      val dvDirs = m.files.flatMap(_.dvs.map(_.dir)).distinct
+      assert(dvDirs.nonEmpty, "the scenario needs live DVs")
+      val schema = TxTable.read(spark, dir).schema
+      dvDirs.foreach { d =>
+        java.nio.file.Files.walk(java.nio.file.Paths.get(dir, d))
+          .sorted(java.util.Comparator.reverseOrder())
+          .forEach(q => java.nio.file.Files.delete(q))
+      }
+      // every file's event_id stats lie below 1000: the range prunes all
+      val none = TxTable.readRange(spark, dir, "event_id", 1000L, 2000L)
+      assert(none.schema === schema)
+      assert(none.count() === 0L)
     }
   }
 

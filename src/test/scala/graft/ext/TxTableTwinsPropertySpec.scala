@@ -14,8 +14,9 @@ import org.scalacheck.rng.Seed
   * value, bucket = key % 4). After every step, `read` at EVERY retained
   * version of both tables must equal the model at that version, row for
   * row (duplicates included), and `metaCount` must equal the model's
-  * size. Compaction and purges are interleaved on both tables, so the
-  * twins are also checked across DV reconciliation. */
+  * size; `readPoint` of one live key and of an absent one must agree
+  * with the model too. Compaction and purges are interleaved on both
+  * tables, so the twins are also checked across DV reconciliation. */
 class TxTableTwinsPropertySpec extends SparkSpec {
   import spark.implicits._
 
@@ -151,6 +152,21 @@ class TxTableTwinsPropertySpec extends SparkSpec {
     }
   }
 
+  /** `readPoint` at the latest version for one live key (the `i`-th in
+    * key order, when any is live) and for key 1000, which lies outside
+    * every file's stats range and so always takes the empty-slice
+    * branch; returns the mismatches against the model. */
+  private def pointMismatches(dir: String, m: Model, i: Int): Seq[String] = {
+    val live = m.keys.toSeq.sorted
+    (live.lift(i % math.max(live.size, 1)).toSeq :+ 1000L).flatMap { k =>
+      val got = TxTable.readPoint(spark, dir, "k", Seq(k.toString))
+        .select(col("k"), col("v"), col("pb").cast("long")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      val want = m.get(k).map(v => (k, v, k % Buckets)).toSeq
+      Option.when(got != want)(s"readPoint($k) $got, model $want")
+    }
+  }
+
   test("COW and MoR twins publish the model's rows at every retained version") {
     val prop = Prop.forAllNoShrink(scenario) { case (init, ops) =>
       graft.QueryUtil.inTempDir("graft_twins") { tmp =>
@@ -166,7 +182,8 @@ class TxTableTwinsPropertySpec extends SparkSpec {
           model = next
           hist = Map(cow -> (hist(cow) + (vCow -> next)), mor -> (hist(mor) + (vMor -> next)))
           Seq(cow -> "cow", mor -> "mor").flatMap { case (d, name) =>
-            mismatches(d, hist(d)).map(e => s"after step $i ($o) $name: $e")
+            (mismatches(d, hist(d)) ++ pointMismatches(d, next, i))
+              .map(e => s"after step $i ($o) $name: $e")
           }
         }
         (failures.isEmpty: Prop) :| s"init $init, ops $ops\n${failures.mkString("\n")}"
